@@ -134,41 +134,16 @@ object Io {
   /** Partitioned parquet sink (`write_processed`, `jobs/io_utils.py:88-107`):
     * derive `year` from `month`, write snappy parquet hive-partitioned by
     * `(StateName, year)` so downstream geo/time queries get partition pruning
-    * for free.
+    * for free. Replaces the whole dataset (static overwrite), whatever the
+    * session's `spark.sql.sources.partitionOverwriteMode`.
     *
     * Scale note: the reference `coalesce(1)`s to one file per partition —
     * correct for its ≲1M-row data, catastrophic at 100 TB (single write task).
-    * Here the file-count knob is `maxRecordsPerFile`; `coalesce(1)` is opt-in
-    * for small outputs only.
+    * Here rows are hash-clustered by the partition keys, so each partition
+    * is written by one task as one file, split at [[maxRecordsPerFile]] rows.
     */
-  def writeProcessed(
-      df: DataFrame,
-      path: String,
-      config: PipelineConfig = PipelineConfig(),
-      singleFilePerPartition: Boolean = false,
-      maxRecordsPerFile: Long = 5000000L): Unit = {
-    val withYear = df.withColumn("year", year(col("month")))
-    // Cluster rows by the hive partition keys before the partitioned write:
-    // otherwise every upstream task writes a file into every partition dir
-    // (tasks x partitions tiny files — the small-files problem). One shuffle
-    // buys one file per partition per key-group; maxRecordsPerFile still
-    // splits genuinely large partitions.
-    // Explicit partition count: AQE's input-byte coalescing was squeezing
-    // this exchange to 1-2 tasks, each then writing ~90 hive directories
-    // SEQUENTIALLY (file open/commit per dir dominates the write). Pinning
-    // to the configured shuffle parallelism spreads the per-directory work
-    // across the cluster while keeping one file per (keys)-group per dir —
-    // each hash group still lands whole in exactly one task.
-    val sized =
-      if (singleFilePerPartition) withYear.coalesce(1)
-      else graft.core.Par.fanOutBy(withYear, config.partitionKeys.map(col): _*)
-    sized.write
-      .mode(SaveMode.Overwrite)
-      .option("compression", "snappy")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(config.partitionKeys: _*)
-      .parquet(path)
-  }
+  def writeProcessed(df: DataFrame, path: String, config: PipelineConfig = PipelineConfig()): Unit =
+    writePartitioned(df, path, config, overwriteMode = "static")
 
   /** Incremental refresh: overwrite only the hive partitions present in
     * `df`, leaving all other partitions untouched (dynamic partition
@@ -177,33 +152,36 @@ object Io {
     * replaces its own `(StateName, year)` directories instead of rewriting
     * the whole dataset.
     */
-  def overwritePartitions(
+  def overwritePartitions(df: DataFrame, path: String, config: PipelineConfig = PipelineConfig()): Unit =
+    writePartitioned(df, path, config, overwriteMode = "dynamic")
+
+  /** Row cap per output file: splits genuinely large partitions. */
+  private val maxRecordsPerFile = 5000000L
+
+  /** The one partitioned writer. `overwriteMode` is the per-write
+    * `partitionOverwriteMode` option, which the file sink reads before the
+    * session conf — so the session conf is neither consulted nor touched.
+    */
+  private def writePartitioned(
       df: DataFrame,
       path: String,
-      config: PipelineConfig = PipelineConfig()): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // same explicit-count clustering as writeProcessed: an unpinned
-      // repartition(keys) lets AQE coalesce the pre-write exchange to 1-2
-      // tasks that then write ~90 hive dirs sequentially — the exact
-      // pathology the full-write path fixed
-      graft.core.Par.fanOutBy(
-        df.withColumn("year", year(col("month"))),
-        config.partitionKeys.map(col): _*)
-        .write
-        .mode(SaveMode.Overwrite)
-        .option("compression", "snappy")
-        .partitionBy(config.partitionKeys: _*)
-        .parquet(path)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-    }
-  }
+      config: PipelineConfig,
+      overwriteMode: String): Unit =
+    // Cluster rows by the hive partition keys before the partitioned write:
+    // otherwise every upstream task writes a file into every partition dir
+    // (tasks x partitions tiny files — the small-files problem). The
+    // explicit partition count keeps AQE's input-byte coalescing from
+    // squeezing this exchange to 1-2 tasks that then write ~90 hive
+    // directories SEQUENTIALLY; each hash group still lands whole in
+    // exactly one task.
+    graft.core.Par.fanOutBy(df.withColumn("year", year(col("month"))), config.partitionKeys.map(col): _*)
+      .write
+      .mode(SaveMode.Overwrite)
+      .option("compression", "snappy")
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .option("partitionOverwriteMode", overwriteMode)
+      .partitionBy(config.partitionKeys: _*)
+      .parquet(path)
 
   /** Processed-parquet scan (`dags/rental_pipeline_dag.py:136`). */
   def readProcessed(spark: SparkSession, path: String): DataFrame =

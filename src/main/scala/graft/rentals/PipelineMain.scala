@@ -10,16 +10,15 @@ import org.apache.spark.sql.SparkSession
   * XCom-passes-paths contract).
   *
   * Usage: runMain graft.rentals.PipelineMain <rawCsvPath> <outPath>
-  *          [--local] [--single-file] [--config=<path>]
+  *          [--local] [--config=<path>]
   */
 object PipelineMain {
   def main(args: Array[String]): Unit = {
     val positional = args.filterNot(_.startsWith("--"))
     require(positional.length == 2,
-      "usage: PipelineMain <rawCsvPath> <outPath> [--local] [--single-file] [--config=<path>]")
+      "usage: PipelineMain <rawCsvPath> <outPath> [--local] [--config=<path>]")
     val Array(rawPath, outPath) = positional
     val local = args.contains("--local") || sys.env.get("ENV").contains("local")
-    val singleFile = args.contains("--single-file")
     val configPath = args.collectFirst { case a if a.startsWith("--config=") => a.stripPrefix("--config=") }
 
     // --local pins an explicit local master; with a LAUNCHER-PROVIDED
@@ -46,7 +45,7 @@ object PipelineMain {
       val runner = new Orchestration.StageRunner("rental_market_etl")
       val processedPath = runner.run("run_transforms") {
         val processed = Io.readRawCsv(spark, rawPath).transform(Transforms.runPipeline)
-        Io.writeProcessed(processed, outPath, config, singleFilePerPartition = singleFile)
+        Io.writeProcessed(processed, outPath, config)
         outPath
       }
       // DQ gate over the *written* output (fresh scan, like the DAG's DQ task)

@@ -41,11 +41,7 @@ object RentalsDemo {
     * order exactly.
     */
   def pipeline(spark: SparkSession, dir: String): DataFrame =
-    rentalsLong(spark, dir)
-      .transform(Transforms.cleanNulls)
-      .transform(Transforms.deduplicate)
-      .transform(Transforms.addMomChange)
-      .transform(Transforms.addStateRank)
+    rentalsLong(spark, dir).transform(Transforms.processLong)
 
   private val longSql: String =
     s"""SELECT CAST(s.s_suppkey AS INTEGER) AS RegionID,
@@ -305,15 +301,14 @@ object RentalsDemo {
          |             ('range_median_rent', 'fail'),
          |             ('uniqueness_RegionID_month', 'warn')) AS c(check_name, severity)""".stripMargin) {
       (spark, dir) =>
-        // The real DQ framework (C2-C4) evaluated through the fused
-        // single-pass path (one scan instead of 6 count jobs; equivalence
-        // with the per-check runner is spec-asserted). The rent range bound
-        // is scaled up because `median_rent` here is monthly revenue, not a
-        // literal rent; the oracle recomputes the same predicates in SQL.
+        // The real DQ framework (C2-C4): the standard gate, one aggregation
+        // job. The rent range bound is scaled up because `median_rent` here
+        // is monthly revenue, not a literal rent; the oracle recomputes the
+        // same predicates in SQL.
         import spark.implicits._
-        val summary = DataQuality.summarizeFused(
+        val summary = DataQuality.summarize(
           rentalsLong(spark, dir),
-          PipelineConfig(rentMax = 50000000.0))
+          DataQuality.standardChecks(PipelineConfig(rentMax = 50000000.0)))
         summary.details
           .map(r => (r.name, r.severity.label, r.passed))
           .toDF("check_name", "severity", "passed")

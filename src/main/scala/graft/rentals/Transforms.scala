@@ -115,17 +115,23 @@ object Transforms {
     df.withColumn("state_rent_rank", rank().over(w))
   }
 
-  /** Full chain in the reference's fixed order (`run_pipeline`,
-    * `jobs/transform.py:161-181`). Order is semantic: nulls are removed before
-    * `lag` (so MoM skips null months) and dedup runs before both windows.
+  /** The post-unpivot chain in the reference's fixed order
+    * (`jobs/transform.py:174-181`). Order is semantic: nulls are removed
+    * before `lag` (so MoM skips null months) and dedup runs before both
+    * windows. Every pipeline entry point — wide CSV or long star-schema
+    * input — ends in exactly this chain.
     */
-  def runPipeline(df: DataFrame): DataFrame =
-    df.transform(enforceSchema)
-      .transform(unpivotMonthly)
-      .transform(cleanNulls)
+  def processLong(df: DataFrame): DataFrame =
+    df.transform(cleanNulls)
       .transform(deduplicate)
       .transform(addMomChange)
       .transform(addStateRank)
+
+  /** Full chain (`run_pipeline`, `jobs/transform.py:161-181`). */
+  def runPipeline(df: DataFrame): DataFrame =
+    df.transform(enforceSchema)
+      .transform(unpivotMonthly)
+      .transform(processLong)
 
   /** Pipeline with in-flight observability: `Dataset.observe` records
     * unpivot arity and null-drop counts *inside the single action* — the DQ
@@ -140,8 +146,5 @@ object Transforms {
       .observe("unpivoted",
         count(lit(1)).as("n_rows"),
         count(col("median_rent")).as("n_nonnull_rent"))
-      .transform(cleanNulls)
-      .transform(deduplicate)
-      .transform(addMomChange)
-      .transform(addStateRank)
+      .transform(processLong)
 }

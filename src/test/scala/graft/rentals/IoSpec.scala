@@ -87,7 +87,7 @@ class IoSpec extends SparkSpec {
     withTempDir { dir =>
       val out = new java.io.File(dir, "processed").getAbsolutePath
       val long = mkDf(Fixtures.longSchema, Fixtures.longRows).transform(Transforms.cleanNulls)
-      Io.writeProcessed(long, out, singleFilePerPartition = true)
+      Io.writeProcessed(long, out)
       val dirs = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("StateName=")).sorted
       assert(dirs.toSeq === Seq("StateName=CA", "StateName=NY", "StateName=TX"))
       val back = Io.readProcessed(spark, out)
@@ -118,6 +118,47 @@ class IoSpec extends SparkSpec {
       val ca = after.filter(col("StateName") === "CA")
       assert(ca.count() === caRefresh.count())
       assert(ca.filter(col("median_rent") =!= 9999.0).count() === 0)
+    }
+  }
+
+  private val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
+
+  /** Runs `body`, then puts the session's overwrite-mode conf back as it
+    * was: set to the same value, or unset.
+    */
+  private def keepingOverwriteMode[A](body: => A): A = {
+    val prev = spark.conf.getAll.get(overwriteModeKey)
+    try body
+    finally prev.fold(spark.conf.unset(overwriteModeKey))(spark.conf.set(overwriteModeKey, _))
+  }
+
+  test("writeProcessed replaces the whole dataset even when the session default is dynamic") {
+    keepingOverwriteMode {
+      spark.conf.set(overwriteModeKey, "dynamic")
+      withTempDir { dir =>
+        val out = new java.io.File(dir, "full").getAbsolutePath
+        val all = mkDf(Fixtures.longSchema, Fixtures.longRows).transform(Transforms.cleanNulls)
+        Io.writeProcessed(all.filter(col("StateName") =!= "CA"), out)
+        // a second full write of disjoint states leaves only its own states
+        Io.writeProcessed(all.filter(col("StateName") === "CA"), out)
+        val states = Io.readProcessed(spark, out).select("StateName").distinct()
+          .collect().map(_.getString(0)).toSet
+        assert(states === Set("CA"))
+      }
+    }
+  }
+
+  test("overwritePartitions leaves the session's overwrite-mode conf as it found it") {
+    keepingOverwriteMode {
+      withTempDir { dir =>
+        val out = new java.io.File(dir, "incr").getAbsolutePath
+        val all = mkDf(Fixtures.longSchema, Fixtures.longRows).transform(Transforms.cleanNulls)
+        Seq(None, Some("static"), Some("STATIC"), Some("dynamic")).foreach { mode =>
+          mode.fold(spark.conf.unset(overwriteModeKey))(spark.conf.set(overwriteModeKey, _))
+          Io.overwritePartitions(all, out)
+          assert(spark.conf.getAll.get(overwriteModeKey) === mode)
+        }
+      }
     }
   }
 

@@ -85,6 +85,51 @@ class PropertiesSpec extends SparkSpec {
     })
   }
 
+  test("DQ gate: every verdict of a random check list equals a plain-Scala count (property)") {
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+    type R = (Option[Int], Option[Int], Option[Int], Option[Double])
+    val schema = StructType(Seq(
+      StructField("k1", IntegerType), StructField("k2", IntegerType),
+      StructField("k1_k2", IntegerType), StructField("v", DoubleType)))
+    // few distinct keys (duplicates), nulls in a key and the value, values on
+    // the same integer grid as the range bounds (both sides of each bound,
+    // and exactly on it); `k1_k2` makes uniqueness over it share a check
+    // name with uniqueness over (k1, k2)
+    val genRow: Gen[R] = for {
+      k1 <- Gen.chooseNum(0, 3)
+      k2 <- Gen.frequency(4 -> Gen.chooseNum(0, 2).map(Option(_)), 1 -> Gen.const(None))
+      k12 <- Gen.chooseNum(0, 5)
+      v <- Gen.frequency(4 -> Gen.chooseNum(-3, 13).map(x => Option(x.toDouble)), 1 -> Gen.const(None))
+    } yield (Some(k1), k2, Some(k12), v)
+    val keyOf: Map[String, R => Any] = Map("k1" -> (_._1), "k2" -> (_._2), "k1_k2" -> (_._3))
+    // each generated check paired with its plain-Scala verdict
+    val genCheck: Gen[(DataQualityCheck, Seq[R] => Boolean)] = Gen.oneOf(
+      Gen.oneOf(0.0, 0.1, 0.25, 0.5, 1.0).map { t =>
+        DataQuality.nullPercentageCheck("v", t) -> ((rs: Seq[R]) =>
+          rs.isEmpty || rs.count(_._4.isEmpty).toDouble / rs.size <= t)
+      },
+      Gen.chooseNum(0L, 12L).map { n =>
+        DataQuality.rowCountCheck(n) -> ((rs: Seq[R]) => rs.size >= n)
+      },
+      (for { lo <- Gen.chooseNum(-3, 6); hi <- Gen.chooseNum(lo, 13) } yield (lo, hi)).map { case (lo, hi) =>
+        DataQuality.rangeCheck("v", lo.toDouble, hi.toDouble) -> ((rs: Seq[R]) =>
+          !rs.exists(_._4.exists(x => x < lo || x > hi)))
+      },
+      Gen.oneOf(Seq("k1"), Seq("k2"), Seq("k1", "k2"), Seq("k1_k2")).map { keys =>
+        DataQuality.uniquenessCheck(keys) -> ((rs: Seq[R]) =>
+          rs.map(r => keys.map(k => keyOf(k)(r))).distinct.size == rs.size)
+      })
+    // small frames, so checks of one kind often disagree within a gate
+    val genRows = Gen.choose(0, 10).flatMap(Gen.listOfN(_, genRow))
+    checkProp(Prop.forAll(genRows, Gen.choose(1, 8).flatMap(Gen.listOfN(_, genCheck))) {
+      (rows, gate) =>
+        val df = mkDf(schema, rows.map(r =>
+          Row.fromSeq(r.productIterator.map { case o: Option[_] => o.getOrElse(null) }.toSeq)))
+        val verdicts = DataQuality.summarize(df, gate.map(_._1)).details.map(_.passed)
+        verdicts == gate.map(_._2(rows))
+    })
+  }
+
   test("empty wide frame flows through the full pipeline to an empty output") {
     val out = mkDf(Fixtures.wideSchema, Nil).transform(Transforms.runPipeline)
     assert(out.count() === 0)
