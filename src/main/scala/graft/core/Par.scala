@@ -48,6 +48,16 @@ object Par {
     * next operator needs the clustering anyway (groupBy on the same keys
     * reuses this exchange; guide §2.4) but its OUTPUT side does the heavy
     * work, so AQE's input-byte-based coalescing must not serialize it.
+    *
+    * The rentals pipeline's two sites:
+    *  - `Transforms.unpivotMonthly` clusters the wide rows by `RegionID`
+    *    ahead of the `stack` unpivot, a 36x expansion on a three-year file
+    *    whose CSV is one input split; the dedup and MoM windows reuse the
+    *    exchange, so the expansion and both windows run on every core.
+    *  - `Io`'s partitioned writer clusters by the hive partition keys so
+    *    each directory gets one file from one task (the write itself goes
+    *    through [[LocalFs]], because without libhadoop Hadoop's stock local
+    *    file system forks a `chmod` per created file and directory).
     */
   def fanOutBy(df: DataFrame, cols: org.apache.spark.sql.Column*): DataFrame =
     df.repartition(parallelism(df), cols: _*)

@@ -42,23 +42,28 @@ object Transforms {
     * (region, date-column) *including null measures*; null-cleaning is a
     * separate, later op. Month strings parse with
     * `coalesce(try_to_date(c,'yyyy-MM-dd'), try_to_date(c,'yyyy-MM'))`
-    * (`jobs/transform.py:82-86`; `yyyy-MM` yields first-of-month). `stack` is
-    * a narrow generator — no shuffle; output rows = regions × month-columns.
+    * (`jobs/transform.py:82-86`; `yyyy-MM` yields first-of-month); the parse
+    * sits inside the `stack` arguments, where its input is a header literal,
+    * so Catalyst folds it once per header at plan time instead of running it
+    * per long row. A header that matches the date-column pattern but is no
+    * date (`2024-13`) gives a null month.
+    *
+    * The wide rows are hash-clustered by `RegionID` first
+    * ([[graft.core.Par.fanOutBy]]): a CSV this size is one input split, so
+    * without it the expansion (one row per month column, 36 for a
+    * three-year file) and the clean, dedup and MoM steps after it run in one
+    * task. Those steps' `RegionID` windows reuse this exchange,
+    * so it replaces the shuffle of the long rows rather than adding one.
     */
   def unpivotMonthly(df: DataFrame): DataFrame = {
     val idCols = Seq("RegionID", "RegionName", "StateName")
     val dateCols = df.columns.filterNot(idCols.contains).filter(Schemas.isDateCol)
     require(dateCols.nonEmpty, "no date-named measure columns to unpivot")
-    val stackArgs = dateCols.map(c => s"'$c', `$c`").mkString(", ")
-    val stackExpr = s"stack(${dateCols.length}, $stackArgs) as (month_str, median_rent)"
-    df.selectExpr(idCols :+ stackExpr: _*)
-      .withColumn(
-        "month",
-        coalesce(
-          try_to_date(col("month_str"), "yyyy-MM-dd"),
-          try_to_date(col("month_str"), "yyyy-MM")))
-      .drop("month_str")
-      .select("RegionID", "RegionName", "StateName", "month", "median_rent")
+    val stackArgs = dateCols.map { c =>
+      s"coalesce(try_to_date('$c', 'yyyy-MM-dd'), try_to_date('$c', 'yyyy-MM')), `$c`"
+    }.mkString(", ")
+    val stackExpr = s"stack(${dateCols.length}, $stackArgs) as (month, median_rent)"
+    graft.core.Par.fanOutBy(df, col("RegionID")).selectExpr(idCols :+ stackExpr: _*)
   }
 
   /** Null-measure filter (`clean_nulls`, `jobs/transform.py:91-104`). */

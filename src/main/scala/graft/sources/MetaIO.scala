@@ -70,18 +70,16 @@ private[sources] object MetaIO {
     restClient.map(_.listTables()).getOrElse(Nil)
 
   // template Configuration: parsing the Hadoop default XMLs costs tens of
-  // ms — pay it once. file: goes through RawLocalFileSystem (no .crc
-  // shadows; metadata docs carry their own JSON integrity) with the FS
-  // cache off so other file:-users' checksumming is untouched.
+  // ms — pay it once. file: goes through the unchecksummed LocalFs.Raw
+  // (no .crc shadows; metadata docs carry their own JSON integrity).
   private lazy val conf: Configuration = {
     val c = new Configuration()
-    c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    c.set("fs.file.impl.disable.cache", "true")
+    graft.core.LocalFs.settings(checksummed = false).foreach { case (k, v) => c.set(k, v) }
     c
   }
 
   // FileSystem per scheme+authority (our conf disables the Hadoop cache
-  // for file:, so cache here instead — RawLocalFileSystem construction is
+  // for file:, so cache here instead — LocalFs.Raw construction is
   // trivial but not free on every metadata probe)
   private val fsCache = TrieMap.empty[String, FileSystem]
 

@@ -66,8 +66,7 @@ object ParquetColumnar {
   // to ParquetRows.buildReadConf) — built once, copied per reader
   private lazy val template: Configuration = {
     val c = new Configuration()
-    c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-    c.set("fs.file.impl.disable.cache", "true")
+    graft.core.LocalFs.settings(checksummed = false).foreach { case (k, v) => c.set(k, v) }
     c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[ParquetReadSupport].getName)
     c.set("spark.sql.caseSensitive", "false")

@@ -40,14 +40,8 @@ object ParquetRows {
       // every file in a `.crc` shadow (2x creates, 2x deletes, checksum
       // CPU) — measurable per-file fixed cost at gate scale, pure
       // overhead under parquet's own page checksums. Object-storage
-      // schemes (s3a://...) are untouched. The impl override alone is
-      // unreliable: Hadoop's FileSystem cache is keyed by scheme+UGI,
-      // not conf, so whoever resolves file: first wins for the whole
-      // JVM — disable the cache for our confs instead (RawLocalFileSystem
-      // construction is trivial), which both guarantees Raw here and
-      // leaves every other file:-scheme user's checksumming untouched.
-      c.set("fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
-      c.set("fs.file.impl.disable.cache", "true")
+      // schemes (s3a://...) are untouched.
+      graft.core.LocalFs.settings(checksummed = false).foreach { case (k, v) => c.set(k, v) }
       c
     }))
 

@@ -97,6 +97,39 @@ class IoSpec extends SparkSpec {
     }
   }
 
+  test("writeProcessed leaves one data file plus its .crc per partition dir, with a plain write's permissions") {
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    // relative dir -> (dir mode, modes of its data files, modes of their
+    // .crc siblings), modes read with the setuid/setgid/sticky bits
+    def layout(root: Path): Map[String, (Int, Set[Int], Set[Int])] = {
+      def mode(p: Path) = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+      val dirs = Files.walk(root).iterator().asScala.filter(Files.isDirectory(_)).toList
+      dirs.map { d =>
+        val files = Files.list(d).iterator().asScala.filter(Files.isRegularFile(_)).toList
+        val (crc, data) = files.partition(_.getFileName.toString.endsWith(".crc"))
+        root.relativize(d).toString -> ((mode(d), data.map(mode).toSet, crc.map(mode).toSet))
+      }.toMap
+    }
+    withTempDir { dir =>
+      val df = mkDf(Fixtures.longSchema, Fixtures.longRows).transform(Transforms.cleanNulls)
+      val out = new java.io.File(dir, "processed").toPath
+      val plain = new java.io.File(dir, "plain").toPath
+      Io.writeProcessed(df, out.toString)
+      df.withColumn("year", year(col("month"))).write
+        .partitionBy("StateName", "year").parquet(plain.toString)
+      val leaves = Files.walk(out).iterator().asScala.filter(_.getFileName.toString.startsWith("year=")).toList
+      assert(leaves.size === 3)
+      leaves.foreach { leaf =>
+        val names = Files.list(leaf).iterator().asScala.map(_.getFileName.toString).toList
+        val data = names.filter(_.endsWith(".parquet"))
+        assert(data.size === 1, names)
+        assert(names.sorted === Seq(s".${data.head}.crc", data.head).sorted, names)
+      }
+      assert(layout(out) === layout(plain))
+    }
+  }
+
   test("dynamic partition overwrite replaces only the incoming partitions") {
     withTempDir { dir =>
       val out = new java.io.File(dir, "incr").getAbsolutePath

@@ -26,6 +26,42 @@ class TransformsSpec extends SparkSpec {
     assert(out.filter(col("median_rent").isNull).count() === 1)
   }
 
+  test("unpivot month parse: yyyy-MM and yyyy-MM-dd headers give dates, a non-date header a null month") {
+    val schema = StructType(Seq("RegionID", "RegionName", "StateName", "2024-01", "2024-02-15", "2024-13")
+      .map(StructField(_, StringType, nullable = true)))
+    // 2024-13 matches the date-column pattern, so it is kept and unpivoted,
+    // but it is no date
+    assert(Schemas.isDateCol("2024-13"))
+    val out = mkDf(schema, Seq(Row("7", "R", "CA", "1.0", "2.0", "3.0")))
+      .transform(Transforms.enforceSchema).transform(Transforms.unpivotMonthly)
+      .select("median_rent", "month").collect()
+      .map(r => r.getDouble(0) -> Option(r.getDate(1)).map(_.toString)).toMap
+    assert(out === Map(1.0 -> Some("2024-01-01"), 2.0 -> Some("2024-02-15"), 3.0 -> None))
+  }
+
+  test("runPipeline shuffles twice: RegionID below the unpivot, then (StateName, month)") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Plans extends AdaptiveSparkPlanHelper
+    def keys(s: ShuffleExchangeExec): Seq[String] = s.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case other => fail(s"not a hash exchange: $other")
+    }
+    val out = wide.transform(Transforms.runPipeline)
+    out.collect() // force AQE's final plan
+    val plan = out.queryExecution.executedPlan
+    val shuffles = Plans.collect(plan) { case s: ShuffleExchangeExec => s }
+    assert(shuffles.map(keys).toSet === Set(Seq("RegionID"), Seq("StateName", "month")), plan.toString)
+    assert(shuffles.size === 2, plan.toString)
+    val generates = Plans.collect(plan) { case g: GenerateExec => g }
+    assert(generates.size === 1, plan.toString)
+    val below = Plans.collect(generates.head) { case s: ShuffleExchangeExec => s }
+    assert(below.map(keys) === Seq(Seq("RegionID")), plan.toString)
+  }
+
   test("enforce_schema drops SizeRank/RegionType and casts strings (test_transform.py:40-48)") {
     val out = Transforms.enforceSchema(wide)
     assert(!out.columns.contains("SizeRank") && !out.columns.contains("RegionType"))
