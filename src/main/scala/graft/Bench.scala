@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.EngineSession
 
 /** Benchmark main (driver contract): times every registered query on
   * `SPARK_GRAFT_SF_DIR`, prints one JSON line.
@@ -36,18 +36,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // gate/bench tables run the FILE-BACKED storage plane by default
-      // (executor-written parquet + durable metadata + path-shipping
-      // scans) — the 100 TB mode; statements naming 'graft.storage' win
-      .config(graft.sources.SeqCatalog.DefaultStorageConf, "parquet")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Unit =

@@ -1,15 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.EngineSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.sources.SeqCatalog.DefaultStorageConf, "parquet")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // GRAFT_EXPLAIN_EXEC=1: run the query first so AQE finalizes the plan —
     // runtime effects (ReusedExchange, coalesced partitions, skew splits)

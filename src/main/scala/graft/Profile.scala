@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.EngineSession
 
 /** Ad-hoc profiling main: time the named queries (args) on
   * `SPARK_GRAFT_SF_DIR`, printing per-run wall times and optionally the
@@ -9,27 +9,19 @@ import org.apache.spark.sql.SparkSession
   * a QueryExecutionListener that prints per-SQL-statement durations — the
   * statement-level breakdown for multi-statement lifecycle queries.
   * Complements [[Bench]] (which times the whole registry): this is the
-  * iterate-on-one-query loop. Session config mirrors Bench exactly (same
-  * shuffle partitions, same file-backed storage default) so numbers and
-  * plans here are the bench's.
+  * iterate-on-one-query loop. Both build their session from
+  * [[graft.core.EngineSession]] on the same `SPARK_GRAFT_CPUS`, so numbers
+  * and plans here are the bench's.
   */
 object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val sqlTimes = sys.env.get("SPARK_GRAFT_SQL_TIMES").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.sources.SeqCatalog.DefaultStorageConf, "parquet")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (sqlTimes) spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
@@ -84,7 +76,7 @@ object Profile {
         val dt = (System.nanoTime() - t0) / 1e9
         if (stages && i == reps) {
           println(s"=== stages of $name (rep $i, ${f"$dt%.2f"} s)")
-          Thread.sleep(200) // listener drain
+          org.apache.spark.sql.graftbridge.Bridge.waitForListeners(spark.sparkContext)
           stageRows.forEach(r => println(r))
         }
         dt

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.EngineSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -185,14 +186,7 @@ object ScaleRamp {
     // optional 4th arg: comma-separated subset of rampQueries to run
     val subset = if (args.length > 3)
       Some(args(3).split(',').map(_.trim).filter(_.nonEmpty).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     if (!new java.io.File(s"$rampDir/documents.parquet").exists()) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.EngineSession
 
 /** Dev smoke driver: runs `SparkEntry.entry` (the t1 contract) and, given
   * query names as args (or `all`), each registered query with a count —
@@ -11,16 +11,7 @@ object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(graft.sources.SeqCatalog.DefaultStorageConf, "parquet")
-      // same extensions as Verify/Bench — the native asof strategy and SQL
-      // function registrations are part of the engine under test
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SMOKE_LOG", "ERROR"))
     val entry = SparkEntry.entry(spark)
     println(s"[smoke] entry rows = ${entry.count()}")

@@ -1,23 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.EngineSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // gate/bench tables run the FILE-BACKED storage plane by default
-      // (executor-written parquet + durable metadata + path-shipping
-      // scans) — the 100 TB mode; statements naming 'graft.storage' win
-      .config(graft.sources.SeqCatalog.DefaultStorageConf, "parquet")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    val spark = EngineSession.builder(EngineSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset filter (comma-separated names): lets tools/compare.py

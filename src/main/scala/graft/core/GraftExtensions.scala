@@ -7,8 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension registering the engine's native expressions as SQL
   * functions, so `spark.sql("SELECT long_dot(a, b) ...")` works next to the
-  * Column API. Install with:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Column API. Installed by [[EngineSession]]'s settings as
   * `spark.sql.extensions=graft.core.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

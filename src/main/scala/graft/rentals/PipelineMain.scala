@@ -1,6 +1,6 @@
 package graft.rentals
 
-import org.apache.spark.sql.SparkSession
+import graft.core.EngineSession
 
 /** CLI entry for the full rental pipeline run — the reference's
   * `spark-submit jobs/transform.py` stage (`jobs/transform.py:184-211` +
@@ -21,21 +21,14 @@ object PipelineMain {
     val local = args.contains("--local") || sys.env.get("ENV").contains("local")
     val configPath = args.collectFirst { case a if a.startsWith("--config=") => a.stripPrefix("--config=") }
 
-    // --local pins an explicit local master; with a LAUNCHER-PROVIDED
-    // master (spark-submit sets the spark.master property) defer to it —
-    // hardcoding local[*] there would silently force single-JVM mode on a
-    // cluster submit; a bare `runMain` with neither still gets local[*]
-    // (the usage line documents --local as optional)
-    val builder0 = SparkSession.builder().appName("rental-pipeline")
-    val spark = (if (local)
-      builder0.master(s"local[${Runtime.getRuntime.availableProcessors()}]")
-    else if (sys.props.contains("spark.master")) builder0
-    else builder0.master("local[*]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.core.GraftExtensions)
-      .getOrCreate()
+    // with a LAUNCHER-PROVIDED master (spark-submit sets the spark.master
+    // property) defer to it, and to its shuffle parallelism — a local
+    // master there would silently force single-JVM mode on a cluster
+    // submit; --local, or a bare `runMain` with neither, runs locally
+    val launched = !local && sys.props.contains("spark.master")
+    val spark = (if (launched) EngineSession.builder()
+      else EngineSession.builder(EngineSession.cores))
+      .appName("rental-pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val config = configPath.map(PipelineConfig.fromFile).getOrElse(PipelineConfig())

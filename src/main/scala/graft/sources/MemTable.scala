@@ -5674,10 +5674,11 @@ final class MemWriteBuilder(key: String, writeSchema: StructType, queryId: Strin
     * shuffles the incoming rows so each write task holds whole partitions —
     * at 100 TB that is the difference between every task appending a sliver
     * of every partition (task-count × partition-count tiny files) and each
-    * partition's data arriving at one task. Non-strict: a distribution
-    * Spark cannot satisfy (e.g. a streaming Update sink) degrades to the
-    * unclustered write, and the publish-side split keeps batches
-    * partition-pure regardless.
+    * partition's data arriving at one task. The distribution is STRICT
+    * whenever the table is clustered, micro-batch writes included (see
+    * `distributionStrictlyRequired`); sort-only tables request a
+    * non-strict unspecified distribution. The publish-side split keeps
+    * batches partition-pure either way.
     */
   override def build(): Write = {
     val st = MemTables.get(key)
@@ -5716,14 +5717,14 @@ final class MemWriteBuilder(key: String, writeSchema: StructType, queryId: Strin
         * 1 task × 1.16 s for 200 tuple files; only a strict
         * RepartitionByExpression honors the count). The count is
         * conf-derived (the session's resolved shuffle parallelism), never
-        * a local constant. Sort-only writes keep the non-strict
-        * unspecified distribution — a pinned count there is an analysis
-        * error, and no current consumer streams into a PARTITIONED table
-        * (streaming sinks all write unpartitioned, taking the plain Write
-        * branch), so strictness binds batch writes only. Batch contents
-        * are unchanged: the publish-side split keeps one batch per
-        * partition tuple whether the tuples arrive at one task or
-        * thirty-two.
+        * a local constant. Strictness follows the table, not the write
+        * kind: a streaming write into a partitioned table is clustered
+        * strictly too (the current streaming sinks all write unpartitioned
+        * tables, which take the plain Write branch). Sort-only writes keep
+        * the non-strict unspecified distribution — a pinned count there is
+        * an analysis error. Batch contents are unchanged: the publish-side
+        * split keeps one batch per partition tuple whether the tuples
+        * arrive at one task or thirty-two.
         */
       override def distributionStrictlyRequired(): Boolean = spec.nonEmpty
       override def requiredNumPartitions(): Int =

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.{Num, QueryDef, Tables}
+import graft.core.{EngineSession, Num, QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -2302,12 +2302,10 @@ object Roundtrips {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // start DRIVER-RESIDENT on purpose (the migration's whole premise),
     // overriding the session's parquet default for this one create
-    val prior = spark.conf.getOption(SeqCatalog.DefaultStorageConf)
-    spark.conf.unset(SeqCatalog.DefaultStorageConf)
-    try {
+    EngineSession.driverResident(spark) {
       spark.sql(s"CREATE TABLE $tbl (k BIGINT, v BIGINT) " +
         "TBLPROPERTIES ('graft.delete-mode'='merge-on-read')") // v0
-    } finally prior.foreach(spark.conf.set(SeqCatalog.DefaultStorageConf, _))
+    }
     val base = Tables.orders(spark, dir).select(
       col("o_orderkey").as("k"), Num.cents(col("o_totalprice")).as("v"))
     base.writeTo(tbl).append() // v1: driver-resident batches

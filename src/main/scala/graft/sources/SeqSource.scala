@@ -324,8 +324,9 @@ object SeqCatalog {
   /** Session conf naming the storage plane a propertyless CREATE TABLE
     * inherits: `'parquet'` = file-backed (executor-written files +
     * durable metadata), anything else/unset = driver-resident. The
-    * driver-contract mains (Verify/Bench/Smoke) set it to `parquet`, so
-    * every gate table runs the scale plane by default.
+    * engine's session profile ([[graft.core.EngineSession]]) sets it to
+    * `parquet`, so every gate, bench and test table runs the scale plane
+    * by default.
     */
   val DefaultStorageConf = "spark.graft.defaultTableStorage"
 }

@@ -52,18 +52,23 @@ object Streams {
   private[graft] def statePartitions(spark: SparkSession, dir: String,
       tables: Seq[String], floor: Int): Int = {
     val parent = spark.sessionState.conf.numShufflePartitions
-    def sizeOf(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.map(sizeOf).sum).getOrElse(0L)
-      else if (f.isFile) f.length()
-      else 0L
-    val bytes = tables.map { t =>
-      val d = new java.io.File(dir)
-      Option(d.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(t + ".parquet")).map(sizeOf).sum
-    }.sum
-    val byData = (bytes / stateBytesPerPartition).toInt
+    val byData = (inputBytes(spark, dir, tables) / stateBytesPerPartition).toInt
     math.min(parent, math.max(floor, byData))
+  }
+
+  /** Bytes under `dir`'s `<table>.parquet*` entries, summed through the
+    * Hadoop file system of `dir`'s path, so a `file:` URI or a non-local
+    * store sizes like a plain local path; a missing `dir` sizes to 0.
+    */
+  private[graft] def inputBytes(spark: SparkSession, dir: String,
+      tables: Seq[String]): Long = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val entries = if (fs.exists(root)) fs.listStatus(root).toSeq else Nil
+    tables.map { t =>
+      entries.filter(_.getPath.getName.startsWith(t + ".parquet"))
+        .map(e => fs.getContentSummary(e.getPath).getLength).sum
+    }.sum
   }
 
   /** Input bytes per streaming state partition (64 MB): state keys are a

@@ -14,6 +14,12 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Blocks until every event posted so far has reached every listener
+    * (`listenerBus` is `private[spark]`).
+    */
+  def waitForListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** `AbstractDataType` is `private[sql]`; alias it so the engine's
     * expressions can declare `inputTypes` (ExpectsInputTypes) — analysis
     * then coerces/validates SQL-surface arguments instead of CCE-ing.

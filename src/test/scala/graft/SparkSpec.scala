@@ -4,9 +4,12 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (mirrors the reference's session
-  * fixture: `tests/conftest.py:17-33` — local[2], 2 shuffle partitions,
-  * UI off, UTC).
+/** Shared local session for all suites: the engine's own session profile
+  * on 2 cores, as the reference's fixture builds the job's session
+  * (`tests/conftest.py:17-33` — local[2], 2 shuffle partitions, UI off,
+  * UTC). Specs therefore run the file-backed storage plane the gate runs;
+  * a driver-resident table is created inside
+  * [[graft.core.EngineSession.driverResident]].
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -28,12 +31,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.core.GraftExtensions)
-    .getOrCreate()
+  lazy val session: SparkSession =
+    graft.core.EngineSession.builder(2).appName("graft-tests").getOrCreate()
 }

@@ -287,11 +287,24 @@ class LimitPushdownSpec extends SparkSpec {
     val reported = scan.estimateStatistics().numRows().getAsLong
     assert(reported < 100L && reported % 5L === 0L, reported.toString)
     // a mutation between stats and planning retires the sorted claim;
-    // the memoized snapshot must keep both views identical regardless
+    // the memoized snapshot must keep both views identical regardless.
+    // Planned rows are counted by READING every planned partition through
+    // the scan's own reader factory, so the check holds on either storage
+    // plane (a file-backed partition ships a path, not rows)
     (100L until 200L).toDF("k").coalesce(1).writeTo("graft.lim_memo").append()
+    val factory = scan.createReaderFactory()
     val planned = scan.planInputPartitions().map { p =>
-      val mp = p.asInstanceOf[MemPartition]
-      (mp.rows.length - mp.dead.size).toLong
+      var n = 0L
+      if (factory.supportColumnarReads(p)) {
+        val r = factory.createColumnarReader(p)
+        try while (r.next()) n += r.get().numRows()
+        finally r.close()
+      } else {
+        val r = factory.createReader(p)
+        try while (r.next()) n += 1L
+        finally r.close()
+      }
+      n
     }.sum
     assert(planned === reported)
     spark.sql("DROP TABLE graft.lim_memo")

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.core.EngineSession
 
 /** The DURABLE metadata plane ([[TableMetadata]] + [[MemTables.unload]] /
   * disk recovery): a file-backed table's version ledger, schema eras,
@@ -109,7 +110,7 @@ class MetadataPersistSpec extends SparkSpec {
 
   test("unload of a driver-resident table is rejected; drop removes metadata") {
     catalogOn(); drop("mp_mem")
-    spark.sql("CREATE TABLE graft.mp_mem (k BIGINT)")
+    EngineSession.driverResident(spark)(spark.sql("CREATE TABLE graft.mp_mem (k BIGINT)"))
     spark.sql("INSERT INTO graft.mp_mem VALUES (1)")
     val e = intercept[Exception](spark.sql("CALL graft.unload_table('mp_mem')"))
     assert(e.getMessage.contains("driver-resident"), e.getMessage)
@@ -268,9 +269,13 @@ class MetadataPersistSpec extends SparkSpec {
 
   test("expiry prunes equality deletes that no retained batch can feel") {
     catalogOn(); drop("mp_eqprune")
-    spark.sql("CREATE TABLE graft.mp_eqprune (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('graft.upsert-keys'='k', " +
-      "'graft.delete-mode'='merge-on-read')")
+    // driver-resident: a file-backed table converts each epoch's equality
+    // delete to positional DVs at commit, leaving no record to prune
+    EngineSession.driverResident(spark) {
+      spark.sql("CREATE TABLE graft.mp_eqprune (k BIGINT, v BIGINT) " +
+        "TBLPROPERTIES ('graft.upsert-keys'='k', " +
+        "'graft.delete-mode'='merge-on-read')")
+    }
     val st0 = MemTables.get("mp_eqprune").get
     import org.apache.spark.sql.catalyst.InternalRow
     def epoch(id: Long, rows: (Long, Long)*): Unit =

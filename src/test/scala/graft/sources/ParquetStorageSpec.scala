@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.core.EngineSession
 import org.apache.spark.sql.sources.{Filter, LessThan}
 
 /** The FILE-BACKED storage plane (`graft.storage=parquet`,
@@ -312,8 +313,10 @@ class ParquetStorageSpec extends SparkSpec {
 
   test("migrate_storage promotes a driver-resident table in place") {
     catalogOn(); drop("pq_migrate")
-    spark.sql("CREATE TABLE graft.pq_migrate (k BIGINT, v STRING) " +
-      "TBLPROPERTIES ('graft.delete-mode'='merge-on-read')")
+    EngineSession.driverResident(spark) {
+      spark.sql("CREATE TABLE graft.pq_migrate (k BIGINT, v STRING) " +
+        "TBLPROPERTIES ('graft.delete-mode'='merge-on-read')")
+    }
     spark.sql("INSERT INTO graft.pq_migrate " +
       "SELECT id, concat('v', id) FROM range(0, 50)") // v1
     spark.sql("DELETE FROM graft.pq_migrate WHERE k < 5") // v2: DVs

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
+import graft.core.EngineSession
 
 /** CONVERT-ON-WRITE for streaming upserts on file-backed tables (the
   * Iceberg equality→position-delete shape): the epoch commit runs a
@@ -121,8 +122,10 @@ class UpsertConversionSpec extends SparkSpec {
   test("driver-resident upsert tables keep the read-time equality delete") {
     catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.upconv_mem")
-    spark.sql("CREATE TABLE graft.upconv_mem (k BIGINT, v BIGINT) TBLPROPERTIES (" +
-      "'graft.delete-mode'='merge-on-read', 'graft.upsert-keys'='k')")
+    EngineSession.driverResident(spark) {
+      spark.sql("CREATE TABLE graft.upconv_mem (k BIGINT, v BIGINT) TBLPROPERTIES (" +
+        "'graft.delete-mode'='merge-on-read', 'graft.upsert-keys'='k')")
+    }
     runEpochs("graft.upconv_mem")
     val st = MemTables.get("upconv_mem").get
     assert(st.storageDir.isEmpty)

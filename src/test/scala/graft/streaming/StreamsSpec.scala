@@ -12,6 +12,16 @@ class StreamsSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  test("input sizing goes through the directory's file system: a file: URI sizes like its path") {
+    withTempDir { dir =>
+      spark.range(0, 1000).write.parquet(new java.io.File(dir, "events.parquet").getPath)
+      val local = Streams.inputBytes(spark, dir.getPath, Seq("events"))
+      assert(local > 0L)
+      assert(Streams.inputBytes(spark, "file:" + dir.getPath, Seq("events")) === local)
+      assert(Streams.inputBytes(spark, dir.getPath, Seq("orders")) === 0L)
+    }
+  }
+
   test("streaming hourly counts equal the batch tumbling-window aggregation") {
     val streamed = Streams.hourlyCounts(Streams.readEventsStream(spark, sf))
     val result = Streams.runAvailableNowToMemory(
