@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{
-  Add, AttributeReference, Cast, Expression, If, IsNull, LessThan, GreaterThan,
-  Literal, Or
+  Add, And, AttributeReference, Cast, Coalesce, EvalMode, Expression,
+  GreaterThanOrEqual, If, IsNotNull, IsNull, LessThanOrEqual, Literal,
+  NumericEvalContext, Or
 }
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -16,59 +17,65 @@ import org.apache.spark.sql.types.{DataType, Decimal, DecimalType, LongType}
   * `sum(CAST(x AS DECIMAL(38,0)))` makes every row pay a 128-bit decimal
   * add (and, for moment sums, a decimal multiply feeding it) — the
   * aggregation stage of a moment-statistics query is pure decimal ALU. A
-  * plain `sum(longCol)` is the fast codegen path but silently wraps past
-  * 2^63, which a 100 TB table with ~10^14-sized per-row products reaches.
+  * plain `sum(longCol)` is the fast codegen path but overflows past 2^63,
+  * which a 100 TB table with ~10^14-sized per-row products reaches.
   *
   * This aggregate keeps both properties: the buffer is (acc DECIMAL(38,0),
-  * lo LONG); each row does one long add plus one range compare, and only
-  * when |lo| crosses 2^62 does the buffer spill lo into acc with a decimal
-  * add — once every ~2^62/|x| rows, amortized to nothing. Merge and final
-  * evaluation are decimal (per-partition counts, not per-row). Numerically
-  * identical to the decimal sum for every input (spec: [[BigSumSpec]]),
-  * overflow-safe for any row count whose true sum fits DECIMAL(38,0).
+  * lo LONG); each row does one long add plus two range compares, and only
+  * when the sum leaves (-2^62, 2^62) does the buffer spill into acc with a
+  * decimal add — once every ~2^62/|x| rows, amortized to nothing. The long
+  * add wraps instead of failing: with |lo| < 2^62, a wrapped sum always
+  * lands outside that range, so the spill re-adds `lo` and `x` exactly in
+  * decimal. Merge and final evaluation are decimal (per-partition counts,
+  * not per-row).
   *
-  * Contract differences from SQL SUM, acceptable for its call sites
-  * (non-null metric columns under a non-empty scan): NULL inputs count as
-  * 0 and the empty-input result is 0, not NULL.
+  * SQL SUM semantics: NULL inputs are skipped, and empty or all-NULL input
+  * yields NULL (`lo` stays NULL until the first non-NULL addend).
+  * Identical to `sum(CAST(x AS DECIMAL(38,0)))` for every input (spec:
+  * [[BigSumSpec]]), overflow-safe for any row count whose true sum fits
+  * DECIMAL(38,0).
   */
 case class BigSum(child: Expression)
     extends DeclarativeAggregate with UnaryLike[Expression] {
 
   private val dec = DecimalType(38, 0)
-  // |lo| beyond this spills into acc; 2^62 leaves headroom of 2^62 for the
-  // next row's addend (any long up to ~4.6e18 cannot overflow the add)
+  // |lo| stays below this between rows
   private val spillAt = 1L << 62
 
   override def dataType: DataType = dec
-  override def nullable: Boolean = false
+  override def nullable: Boolean = true
   override def prettyName: String = "big_sum"
 
   private lazy val acc = AttributeReference("acc", dec, nullable = false)()
-  private lazy val lo = AttributeReference("lo", LongType, nullable = false)()
+  private lazy val lo = AttributeReference("lo", LongType, nullable = true)()
 
   override lazy val aggBufferAttributes: Seq[AttributeReference] = Seq(acc, lo)
 
   override lazy val initialValues: Seq[Expression] =
-    Seq(Literal.create(Decimal(0), dec), Literal(0L))
+    Seq(Literal.create(Decimal(0), dec), Literal.create(null, LongType))
 
   override lazy val updateExpressions: Seq[Expression] = {
-    val x = If(IsNull(child), Literal(0L), child)
-    val newLo = Add(lo, x)
+    val base = Coalesce(Seq(lo, Literal(0L)))
+    // NULL exactly when the row is NULL, which makes `spill` NULL (false)
+    val newLo = Add(base, child, NumericEvalContext(EvalMode.LEGACY))
+    // `spill` heads both expressions, so subexpression elimination
+    // computes it (and newLo) once per row
     val spill = Or(
-      GreaterThan(newLo, Literal(spillAt)),
-      LessThan(newLo, Literal(-spillAt)))
+      GreaterThanOrEqual(newLo, Literal(spillAt)),
+      LessThanOrEqual(newLo, Literal(-spillAt)))
     Seq(
-      If(spill, Add(acc, Cast(newLo, dec)), acc),
-      If(spill, Literal(0L), newLo))
+      If(spill, Add(Add(acc, Cast(base, dec)), Cast(child, dec)), acc),
+      If(spill, Literal(0L), Coalesce(Seq(newLo, lo))))
   }
 
   override lazy val mergeExpressions: Seq[Expression] = Seq(
     // fold the right side's whole value into acc; keeping only the left
-    // lo bounds |lo| at 2^62 + one addend through any merge chain
-    Add(Add(acc.left, acc.right), Cast(lo.right, dec)),
-    lo.left)
+    // lo keeps |lo| below 2^62 through any merge chain
+    Add(Add(acc.left, acc.right), Cast(Coalesce(Seq(lo.right, Literal(0L))), dec)),
+    If(And(IsNull(lo.left), IsNotNull(lo.right)), Literal(0L), lo.left))
 
-  override lazy val evaluateExpression: Expression = Add(acc, Cast(lo, dec))
+  override lazy val evaluateExpression: Expression =
+    If(IsNull(lo), Literal.create(null, dec), Add(acc, Cast(lo, dec)))
 
   override protected def withNewChildInternal(newChild: Expression): BigSum =
     copy(child = newChild)

@@ -784,8 +784,7 @@ object MatViews {
   private[sources] def persist(st: MvState): Unit = {
     val storeSt = MemTables.get(st.storeKey).getOrElse(throw new IllegalStateException(
       s"materialized view '${st.name}': store table ${st.storeKey} missing"))
-    val dir = storeSt.storageDir.getOrElse(throw new IllegalStateException(
-      s"materialized view '${st.name}': store table ${st.storeKey} is not file-backed"))
+    val dir = storeSt.storageDir
     val expectedGen = journalGens.getOrElse(st.name, 0L)
     val o = mapper.createObjectNode()
     // the CAS generation — FIRST field by contract ([[MetaIO.commitCas]])
@@ -959,8 +958,7 @@ object MatViews {
         val storeSt = MemTables.get(name + StoreSuffix)
         val recovered = for {
           st0 <- storeSt
-          dir <- st0.storageDir
-          st <- loadJournal(dir)
+          st <- loadJournal(st0.storageDir)
           if st.name == name
         } yield {
           val r = registry.putIfAbsent(name, st).getOrElse(st)
@@ -1631,7 +1629,7 @@ object MatViews {
       // the strength of a name suffix would be data loss
       val storeKey = name + StoreSuffix
       val ownsStore = known || MemTables.get(storeKey).exists(st =>
-        st.storageDir.exists(d => MetaIO.pointerExists(d, JournalName)))
+        MetaIO.pointerExists(st.storageDir, JournalName))
       if (!known && !ownsStore && MemTables.get(storeKey).isDefined)
         // a crash between the store CREATE and the first journal write
         // leaves a journal-less store this procedure must NOT reclaim

@@ -13,27 +13,29 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.collection.concurrent.TrieMap
 
 /** The WRITE half of the V2 connector surface ([[SeqSource]] is the read
-  * half): an in-memory table hosting Spark's full batch commit protocol —
+  * half): a file-backed table hosting Spark's full batch commit protocol —
   * `SupportsWrite` → `WriteBuilder` (+truncate) → `BatchWrite` →
   * `DataWriterFactory` → per-task `DataWriter` → `WriterCommitMessage` →
   * driver-side atomic `commit`.
   *
-  * The storage is a driver map (gate-sized by design); the CONTRACT is the
-  * 100 TB part and is implemented exactly as a real external sink must:
+  * The table state (manifests, versions, refs) is a driver map backed by
+  * a durable metadata document; the rows are parquet files under the
+  * table directory. The CONTRACT is implemented exactly as a real
+  * external sink must:
   *
-  *  - every write task buffers rows and ships them INSIDE its commit
-  *    message — nothing becomes visible at task end;
+  *  - every write task writes its files and ships their MANIFESTS inside
+  *    its commit message — nothing becomes visible at task end;
   *  - only the driver's `commit(messages)` publishes, atomically, the one
   *    message Spark chose per task — a speculative twin or retried attempt
-  *    produces a message that is simply never committed, so at-least-once
-  *    task execution still yields exactly-once table contents;
+  *    produces a message that is simply never committed (its files are
+  *    reclaimed on abort), so at-least-once task execution still yields
+  *    exactly-once table contents;
   *  - `truncate` composes with the same protocol (INSERT OVERWRITE /
   *    `writeTo.overwrite`): the old contents are replaced in the SAME
   *    atomic publish, never observable half-swapped;
-  *  - reads snapshot the committed batches at planning time and carry rows
-  *    in the `InputPartition`s (serializable — executor-correct, not a
-  *    shared-JVM shortcut), one partition per committed task preserving the
-  *    write parallelism;
+  *  - reads snapshot the committed batches at planning time and ship each
+  *    batch's file PATH in its `InputPartition` (executors stream the
+  *    file), one partition per committed batch;
   *  - SCHEMA EVOLUTION (`ALTER TABLE ... ADD/DROP COLUMNS`) follows the
   *    table-format contract (Iceberg-style): an alter rewrites METADATA
   *    only — every committed batch stays tagged with the schema it was
@@ -73,44 +75,30 @@ object MemTables {
     * `(_batch_id, _batch_pos)` — anchors on it, the mem-table analogue of
     * Iceberg's `(_file, _pos)`.
     */
-  /** Where one committed batch's ROWS live — the storage-plane fork:
-    *
-    *  - [[MemStore]] — driver-resident array (the default mode: rows
-    *    travel inside commit messages; gate-sized by design);
-    *  - [[FileStore]] — an executor-written parquet file
-    *    (`graft.storage=parquet`): the driver holds only this manifest
-    *    entry (path + count; bounds/tuple live on [[TaggedBatch]]), scans
-    *    ship the PATH and executors stream the rows, so neither publish
-    *    nor read ever materializes data driver-side. `rows` loads the
-    *    file — only content-inspecting maintenance paths use it
-    *    (equality-delete probes, DELETE row evaluation, `compact_table`'s
-    *    fold), each documented gate-scale at its call site.
+  /** Where one committed batch's ROWS live: an executor- or driver-written
+    * parquet file under the table directory. The driver holds only this
+    * manifest entry (path + count; bounds/tuple live on [[TaggedBatch]]),
+    * scans ship the PATH and executors stream the rows, so neither publish
+    * nor read ever materializes data driver-side. `rows` loads the file —
+    * only content-inspecting maintenance paths use it (equality-delete
+    * probes, sessionless DELETE row evaluation, `compact_table`'s fold),
+    * each documented gate-scale at its call site.
     */
-  sealed trait RowStore extends Serializable {
-    def count: Int
-    def rows: Array[InternalRow]
-    def file: Option[String]
-  }
-  final case class MemStore(rows: Array[InternalRow]) extends RowStore {
-    def count: Int = rows.length
-    def file: Option[String] = None
-  }
   final case class FileStore(path: String, count: Int, schema: StructType,
-      sorted: Boolean = false) extends RowStore {
+      sorted: Boolean = false) {
     // `sorted` = verified sorted by the table's declared order AT WRITE
     // (task-side for executor files, publish-side for driver files): the
-    // claim maintenance consults it so a sorted file-backed ingest never
-    // reads its just-written files back through the driver. Transient to
-    // this publish — never persisted (the table-level claim is).
+    // claim maintenance consults it so a sorted ingest never reads its
+    // just-written files back through the driver. Transient to this
+    // publish — never persisted (the table-level claim is).
     @transient private lazy val loaded: Array[InternalRow] =
       ParquetRows.read(path, schema)
     def rows: Array[InternalRow] = loaded
-    def file: Option[String] = Some(path)
   }
 
   final case class TaggedBatch(
       schema: StructType, version: Long, writeVersion: Long,
-      store: RowStore, removedAt: Long = Long.MaxValue,
+      store: FileStore, removedAt: Long = Long.MaxValue,
       dv: Map[Int, Long] = Map.empty, batchId: Long = -1L,
       stats: Map[String, ColStats] = Map.empty,
       part: Seq[Any] = Nil, specId: Int = 0) {
@@ -536,15 +524,11 @@ object MemTables {
   private def maintainSortClaim(
       st: State, fresh: Seq[TaggedBatch], truncate: Boolean): Unit = {
     val declared = st.declaredSortOrder
-    // file-backed batches carry their verdict (computed where the rows
-    // were: the write task or the driver materialization) — verifying
-    // here would pull every just-written file back through the driver
-    // AND pin it via the store's lazy row cache, defeating the file plane
-    def verified(b: TaggedBatch): Boolean = b.store match {
-      case f: FileStore => f.sorted
-      case _ => batchSorted(b.schema, b.rows, declared)
-    }
-    if (declared.isEmpty || !fresh.forall(verified))
+    // batches carry their verdict (computed where the rows were: the
+    // write task or the driver materialization) — verifying here would
+    // pull every just-written file back through the driver AND pin it via
+    // the store's lazy row cache, defeating the file plane
+    if (declared.isEmpty || !fresh.forall(_.store.sorted))
       st.clearSortOrder()
     else if (st.sortedBy == declared) () // active claim survives the append
     else if (truncate) {
@@ -864,7 +848,8 @@ object MemTables {
       initialSchema: StructType, val deleteMode: String = DeleteModeCow,
       val createProps: Map[String, String] = Map.empty,
       initialPartitioning: Seq[PartField] = Nil,
-      initialStorageDir: Option[String] = None,
+      // the table directory: data files, manifests and metadata.json
+      val storageDir: String,
       // the table's catalog key, recorded in the durable metadata plane
       // so disk recovery can match a directory back to its table
       initialTableKey: String = "") {
@@ -880,10 +865,6 @@ object MemTables {
     // persisted identity (pre-uuid metadata falls back to the storage
     // directory's name, which embeds a create-time nonce).
     @volatile var tableUuid: String = java.util.UUID.randomUUID().toString
-    // Some(dir) = file-backed storage plane ([[MemTables.StorageProp]]);
-    // a var because `CALL graft.migrate_storage` promotes a
-    // driver-resident table onto the file plane in place
-    @volatile var storageDir: Option[String] = initialStorageDir
     // PARTITION SPEC TIMELINE (Iceberg spec evolution): specHistory(i) is
     // spec id `i`, append-only; `partitioning` is the CURRENT spec. Every
     // batch carries the spec id it was written under ([[TaggedBatch
@@ -1014,16 +995,14 @@ object MemTables {
       versionTimes = versionTimes :+ (version, ts)
       opKinds = opKinds.updated(version, kind)
       // every version-minting mutation lands the durable metadata plane
-      // before its monitor releases — the commit IS the metadata write
-      // (file-backed tables only; [[TableMetadata.write]] no-ops without
-      // a storage dir). Non-stamping mutators (refs, branch stages,
-      // expiry) call persistMeta explicitly.
+      // before its monitor releases — the commit IS the metadata write.
+      // Non-stamping mutators (refs, branch stages, expiry) call
+      // persistMeta explicitly.
       persistMeta(this)
     }
   }
 
-  /** Write the durable metadata plane ([[TableMetadata]]) of a
-    * file-backed table; driver-resident tables have none by contract.
+  /** Write the durable metadata plane ([[TableMetadata]]) of a table.
     * Callers hold the state's monitor.
     *
     * A CAS CONFLICT here means another PROCESS committed this table since
@@ -1034,13 +1013,12 @@ object MemTables {
     * against the recovered state preserves BOTH writers' changes.
     */
   private[sources] def persistMeta(st: State): Unit =
-    if (st.storageDir.isDefined)
-      try TableMetadata.write(st)
-      catch {
-        case e: MetaIO.CommitConflictException =>
-          tables.remove(st.tableKey, st) // never a successor's state
-          st.storageDir.foreach(metaKeyCache.remove)
-          throw new java.util.ConcurrentModificationException(
+    try TableMetadata.write(st)
+    catch {
+      case e: MetaIO.CommitConflictException =>
+        tables.remove(st.tableKey, st) // never a successor's state
+        metaKeyCache.remove(st.storageDir)
+        throw new java.util.ConcurrentModificationException(
             s"table ${st.tableKey}: ${e.getMessage}", e)
       }
 
@@ -1194,14 +1172,12 @@ object MemTables {
     */
   val AutoCompactDeadRatioProp = "graft.auto-compact-max-dead-ratio"
 
-  /** `'graft.storage'='parquet'` (create-time): the FILE-BACKED storage
-    * plane — batches become executor-written parquet files under a table
-    * directory; the driver holds only manifest entries (path, count,
-    * partition tuple, column bounds), the task-commit protocol commits
-    * file paths instead of row payloads, and scans ship paths for
-    * executors to stream. This removes the rows-in-commit-messages and
-    * rows-in-InputPartitions ceilings of the default (driver-resident)
-    * mode — the two boundaries that made the mem plane gate-scale-only.
+  /** `'graft.storage'` (create-time): absent or `'parquet'`, the table's
+    * one storage plane — batches are executor-written parquet files under
+    * a table directory; the driver holds only manifest entries (path,
+    * count, partition tuple, column bounds), the task-commit protocol
+    * commits file paths, and scans ship paths for executors to stream.
+    * Any other value is rejected at create.
     */
   val StorageProp = "graft.storage"
 
@@ -1263,16 +1239,8 @@ object MemTables {
       throw new IllegalArgumentException(
         s"graft.delete-mode must be '$DeleteModeCow' or '$DeleteModeMor', got '$deleteMode'")
     validateSpec(schema, partitioning)
-    val storageDir = props.get(StorageProp) match {
-      case None => None
-      case Some("parquet") =>
-        // table location: tmp at gate scale; the Hadoop Path API the I/O
-        // goes through addresses object storage identically on a cluster
-        val dir = new java.io.File(tablesRoot,
-          sanitizeKey(key) + "-" + java.util.UUID.randomUUID().toString.take(8))
-        dir.mkdirs()
-        Some(dir.getAbsolutePath)
-      case Some(other) => throw new IllegalArgumentException(
+    props.get(StorageProp).filter(_ != "parquet").foreach { other =>
+      throw new IllegalArgumentException(
         s"$StorageProp must be 'parquet', got '$other'")
     }
     props.get(UpsertKeysProp).foreach { ks =>
@@ -1310,6 +1278,13 @@ object MemTables {
             s"bloom column $c has unsupported type ${f.dataType.simpleString}")
       }
     }
+    // table location: tmp at gate scale; the Hadoop Path API the I/O goes
+    // through addresses object storage identically on a cluster. Allocated
+    // after validation, so a rejected create leaves no directory behind.
+    val dir = new java.io.File(tablesRoot,
+      sanitizeKey(key) + "-" + java.util.UUID.randomUUID().toString.take(8))
+    dir.mkdirs()
+    val storageDir = dir.getAbsolutePath
     val st = new State(schema, deleteMode, props, partitioning, storageDir, key)
     if (declared.nonEmpty) {
       // an empty table is trivially sorted: the claim holds from v0 and
@@ -1321,7 +1296,7 @@ object MemTables {
     // the create itself is the first durable commit: a restart between
     // CREATE and the first INSERT must still find the (empty) table
     if (fresh) st.synchronized(persistMeta(st))
-    else storageDir.foreach(ParquetRows.deleteDir) // lost the race: no orphan dir
+    else ParquetRows.deleteDir(storageDir) // lost the race: no orphan dir
     fresh
   }
 
@@ -1357,7 +1332,7 @@ object MemTables {
     * evicts.
     */
   private def refreshIfStale(key: String, st: State): Option[State] = {
-    val dir = st.storageDir.getOrElse(return Some(st))
+    val dir = st.storageDir
     val iv =
       try org.apache.spark.sql.internal.SQLConf.get.getConfString(
         "spark.graft.catalog.refresh-interval-ms", "1000").toLong
@@ -1520,62 +1495,6 @@ object MemTables {
       }
   }
 
-  /** STORAGE MIGRATION (`CALL graft.migrate_storage('t', 'parquet')`):
-    * promote a driver-resident table onto the file-backed plane IN
-    * PLACE — every batch's rows (current, retained history, and branch
-    * stages alike) are written out as parquet files, the store entries
-    * become manifests, and the durable metadata plane starts persisting;
-    * all future writes land executor-side as files. No version is minted
-    * and no ledger entry appears: the logical table is bit-identical
-    * before and after (CDC-invisible by construction — there is nothing
-    * to report). Store SHARING is preserved (a rollback restore that
-    * shares its original's rows keeps sharing the written file — the
-    * expiry shared-file guard stays meaningful). Rows are written
-    * driver-side because that is where they already live; the point of
-    * the migration is that nothing else ever has to be again. Returns
-    * (batches migrated, storage dir).
-    */
-  def migrateStorage(key: String, target: String): (Long, String) = {
-    if (target != "parquet")
-      throw new IllegalArgumentException(
-        s"migrate_storage target must be 'parquet', got '$target'")
-    val st = required(key)
-    st.synchronized {
-      st.storageDir match {
-        case Some(dir) => (0L, dir) // already file-backed: no-op
-        case None =>
-          val dir = new java.io.File(tablesRoot,
-            sanitizeKey(key) + "-" + java.util.UUID.randomUUID().toString.take(8))
-          dir.mkdirs()
-          val dirPath = dir.getAbsolutePath
-          // identity-preserving conversion: batches sharing one store
-          // (rollback restores) share one file afterwards
-          val converted = new java.util.IdentityHashMap[RowStore, FileStore]()
-          var n = 0L
-          def conv(b: TaggedBatch): TaggedBatch = b.store match {
-            case ms: MemStore =>
-              val fs = Option(converted.get(ms)).getOrElse {
-                val path = s"$dirPath/migrate-" +
-                  s"${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-                ParquetRows.write(path, b.schema, ms.rows.iterator)
-                val f = FileStore(path, ms.rows.length, b.schema)
-                converted.put(ms, f)
-                f
-              }
-              n += 1
-              b.copy(store = fs)
-            case _ => b
-          }
-          st.batches = st.batches.map(conv)
-          st.branches = st.branches.view.mapValues(bs =>
-            bs.copy(appends = bs.appends.map(_.map(conv)))).toMap
-          st.storageDir = Some(dirPath)
-          persistMeta(st)
-          (n, dirPath)
-      }
-    }
-  }
-
   /** RENAME a table: a registry re-key — data, history, refs, and the
     * storage directory all stay put; the durable metadata re-persists
     * under the new key so disk recovery follows (the directory's name
@@ -1641,10 +1560,8 @@ object MemTables {
             cleanupAnd(s"cannot commit REPLACE TABLE: $targetKey changed " +
               "concurrently — the staged result is discarded")
           }
-          old.storageDir.foreach { d =>
-            ParquetRows.deleteDir(d)
-            metaKeyCache.remove(d)
-          }
+          ParquetRows.deleteDir(old.storageDir)
+          metaKeyCache.remove(old.storageDir)
         case _ =>
           if (tables.putIfAbsent(targetKey, st).isDefined) {
             st.tableKey = stagingKey
@@ -1657,19 +1574,13 @@ object MemTables {
     }
   }
 
-  /** Drop a file-backed table's IN-MEMORY state only (`CALL
-    * graft.unload_table`): data files and the metadata document stay on
-    * disk, and the next read recovers them — the restart-survival drill,
-    * and the memory-pressure valve a long-lived driver needs. Rejected
-    * for driver-resident tables, whose rows have no durable copy (DROP
-    * TABLE is the only exit there).
+  /** Drop a table's IN-MEMORY state only (`CALL graft.unload_table`):
+    * data files and the metadata document stay on disk, and the next read
+    * recovers them — the restart-survival drill, and the memory-pressure
+    * valve a long-lived driver needs.
     */
   def unload(key: String): Unit = {
     val st = required(key)
-    if (st.storageDir.isEmpty)
-      throw new IllegalArgumentException(
-        s"mem table $key is driver-resident ('$StorageProp' unset) — unloading " +
-          "would lose it; use DROP TABLE, or recreate with 'graft.storage'='parquet'")
     // the plane is already current (every mutation persists under the
     // monitor); this re-write is the cheap belt-and-braces that makes
     // unload safe even if a future mutation path forgets to persist
@@ -1677,13 +1588,13 @@ object MemTables {
     tables.remove(key)
   }
 
-  /** One write task's contribution to a publish — the storage-plane fork
-    * at the commit-message level:
+  /** One contribution to a publish:
     *
-    *  - [[RowsPayload]] — the rows themselves (driver-resident mode);
-    *  - [[FilesPayload]] — manifests of executor-written parquet files
-    *    (`graft.storage=parquet`): the split, the stats pass, and the
-    *    bytes all happened IN THE TASK; the driver commits paths.
+    *  - [[RowsPayload]] — rows the DRIVER holds (maintenance folds, delta
+    *    post-images, direct commits); [[mkBatches]] writes them to a file;
+    *  - [[FilesPayload]] — manifests of executor-written parquet files:
+    *    the split, the stats pass, and the bytes all happened IN THE
+    *    TASK; the driver commits paths.
     */
   sealed trait TaskPayload extends Serializable {
     def nonEmpty: Boolean
@@ -1731,25 +1642,22 @@ object MemTables {
       }
   }
 
-  /** The store one DRIVER-materialized row group publishes under: a
-    * parquet-backed table stays UNIFORMLY file-backed (the driver writes
-    * the file — these are the maintenance paths whose rows materialize
-    * driver-side anyway: compaction folds, CoW delete survivors, rollback
-    * subsets, delta post-images); the default mode keeps the rows.
+  /** The store one DRIVER-materialized row group publishes under: the
+    * driver writes the file — these are the maintenance paths whose rows
+    * materialize driver-side anyway (compaction folds, sessionless CoW
+    * delete survivors, rollback subsets, delta post-images).
     */
   private def storeFor(
-      st: State, schema: StructType, rows: Array[InternalRow]): RowStore =
-    st.storageDir match {
-      case Some(dir) =>
-        val path = s"$dir/driver-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
-        ParquetRows.write(path, schema, rows.iterator)
-        // verdict computed HERE, while the rows are in hand — the claim
-        // maintenance must never re-read the file to learn it
-        val declared = st.declaredSortOrder
-        FileStore(path, rows.length, schema,
-          sorted = declared.nonEmpty && batchSorted(schema, rows, declared))
-      case None => MemStore(rows)
-    }
+      st: State, schema: StructType, rows: Array[InternalRow]): FileStore = {
+    val path =
+      s"${st.storageDir}/driver-${java.util.UUID.randomUUID().toString.take(12)}.parquet"
+    ParquetRows.write(path, schema, rows.iterator)
+    // verdict computed HERE, while the rows are in hand — the claim
+    // maintenance must never re-read the file to learn it
+    val declared = st.declaredSortOrder
+    FileStore(path, rows.length, schema,
+      sorted = declared.nonEmpty && batchSorted(schema, rows, declared))
+  }
 
   /** Declared NOT NULL enforcement at PUBLISH (Spark's ANSI store
     * assignment already AssertNotNull-guards SQL writes; this is the
@@ -1784,8 +1692,7 @@ object MemTables {
     * committed on executors BEFORE the driver publish registers them, so
     * a zero-grace sweep racing that window would delete files the
     * imminent publish commits manifests to. Returns (orphans deleted,
-    * files kept — referenced OR within grace). No-op (0, 0) for
-    * driver-resident tables.
+    * files kept — referenced OR within grace).
     */
   val DefaultOrphanGraceMs: Long = 3L * 24 * 3600 * 1000 // Iceberg's default
 
@@ -1796,43 +1703,40 @@ object MemTables {
       throw new IllegalArgumentException(
         s"older_than_ms must be non-negative, got $graceMillis")
     st.synchronized {
-      st.storageDir match {
-        case None => (0L, 0L)
-        case Some(dir) =>
-          // EVERY batch counts — including removedAt (retained history)
-          // and branch stages; only expiry may shrink that set
-          val allBatches = (st.batches.iterator ++
-            st.branches.valuesIterator.flatMap(_.batches.iterator)).toVector
-          val referenced = allBatches.iterator.flatMap(_.store.file).toSet
-          // manifests of referenced batches stay too (expiry leaves the
-          // physically-dropped batches' manifests as sweepable orphans)
-          val referencedManifests = allBatches.iterator
-            .flatMap(TableMetadata.manifestNameOf).toSet
-          // DV sidecars referenced by the current plane: main batches +
-          // branch stages — superseded vectors (new kills minted a new
-          // content-derived name) age out like superseded data files
-          val referencedDvs = (st.batches.iterator
-            .flatMap(TableMetadata.dvFileNameOf) ++
-            st.branches.valuesIterator.flatMap(_.dvs.iterator.flatMap {
-              case (bid, poss) => TableMetadata.branchDvFileNameOf(bid, poss)
-            })).toSet
-          val cutoff = System.currentTimeMillis() - graceMillis
-          val onDisk = Option(new java.io.File(dir).listFiles())
-            .getOrElse(Array.empty)
-            .filter(f => f.isFile && (f.getName.endsWith(".parquet") ||
-              (f.getName.startsWith("manifest-") && f.getName.endsWith(".json")) ||
-              (f.getName.startsWith("dv-") && f.getName.endsWith(".bin"))))
-          val (kept, orphans) = onDisk.partition { f =>
-            (if (f.getName.endsWith(".parquet")) referenced.contains(f.getAbsolutePath)
-             else if (f.getName.endsWith(".bin")) referencedDvs.contains(f.getName)
-             else referencedManifests.contains(f.getName)) ||
-              f.lastModified() > cutoff
-          }
-          orphans.foreach(f =>
-            if (f.getName.endsWith(".parquet")) ParquetRows.delete(f.getAbsolutePath)
-            else f.delete())
-          (orphans.length.toLong, kept.length.toLong)
+      val dir = st.storageDir
+      // EVERY batch counts — including removedAt (retained history)
+      // and branch stages; only expiry may shrink that set
+      val allBatches = (st.batches.iterator ++
+        st.branches.valuesIterator.flatMap(_.batches.iterator)).toVector
+      val referenced = allBatches.iterator.map(_.store.path).toSet
+      // manifests of referenced batches stay too (expiry leaves the
+      // physically-dropped batches' manifests as sweepable orphans)
+      val referencedManifests = allBatches.iterator
+        .map(TableMetadata.manifestNameOf).toSet
+      // DV sidecars referenced by the current plane: main batches +
+      // branch stages — superseded vectors (new kills minted a new
+      // content-derived name) age out like superseded data files
+      val referencedDvs = (st.batches.iterator
+        .flatMap(TableMetadata.dvFileNameOf) ++
+        st.branches.valuesIterator.flatMap(_.dvs.iterator.flatMap {
+          case (bid, poss) => TableMetadata.branchDvFileNameOf(bid, poss)
+        })).toSet
+      val cutoff = System.currentTimeMillis() - graceMillis
+      val onDisk = Option(new java.io.File(dir).listFiles())
+        .getOrElse(Array.empty)
+        .filter(f => f.isFile && (f.getName.endsWith(".parquet") ||
+          (f.getName.startsWith("manifest-") && f.getName.endsWith(".json")) ||
+          (f.getName.startsWith("dv-") && f.getName.endsWith(".bin"))))
+      val (kept, orphans) = onDisk.partition { f =>
+        (if (f.getName.endsWith(".parquet")) referenced.contains(f.getAbsolutePath)
+         else if (f.getName.endsWith(".bin")) referencedDvs.contains(f.getName)
+         else referencedManifests.contains(f.getName)) ||
+          f.lastModified() > cutoff
       }
+      orphans.foreach(f =>
+        if (f.getName.endsWith(".parquet")) ParquetRows.delete(f.getAbsolutePath)
+        else f.delete())
+      (orphans.length.toLong, kept.length.toLong)
     }
   }
 
@@ -1840,10 +1744,8 @@ object MemTables {
     // disk-resident table must work after a restart, like any entry point
     case Some(st) =>
       tables.remove(key)
-      st.storageDir.foreach { d =>
-        ParquetRows.deleteDir(d) // file-backed: reclaim
-        metaKeyCache.remove(d) // and the recovery-scan cache entry with it
-      }
+      ParquetRows.deleteDir(st.storageDir)
+      metaKeyCache.remove(st.storageDir) // and the recovery-scan cache entry
       true
     case None => false
   }
@@ -2087,43 +1989,32 @@ object MemTables {
       st.branches = st.branches - branch
       // file-backed staged batches never published — reclaim their files
       // (a fast-forwarded branch keeps them: its batches moved to main)
-      bs.batches.foreach(_.store.file.foreach(ParquetRows.delete))
+      bs.batches.foreach(b => ParquetRows.delete(b.store.path))
       persistMeta(st)
     }
   }
 
-  /** Stage one write's task batches onto a branch — invisible to main,
+  /** Stage one write's task files onto a branch — invisible to main,
     * versionless (the version slots are minted at publish).
     */
   def commitToBranch(
       key: String, branch: String,
-      writeSchema: StructType, batches: Seq[TaskPayload]): Unit = {
+      writeSchema: StructType, batches: Seq[FilesPayload]): Unit = {
     val st = tables.getOrElse(key,
       throw new IllegalStateException(s"mem table $key dropped mid-write"))
     st.synchronized {
       val bs = st.branches.getOrElse(branch,
         throw new IllegalStateException(s"branch '$branch' of $key dropped mid-write"))
-      val staged = batches.flatMap {
-        case RowsPayload(rs) =>
-          splitByPartition(st.partitioning, writeSchema, rs).map { case (pt, rows) =>
-            val stats = statsOf(writeSchema, rows, st.bloomCols.toSet)
-            enforceNotNull(writeSchema, stats)
-            // ids minted at STAGING (not publish): branch DML keys its
-            // kills on them, and fast_forward preserves them
-            TaggedBatch(writeSchema, bs.base, bs.base, storeFor(st, writeSchema, rows),
-              batchId = st.mintBatchId(), stats = stats, part = pt,
-              specId = st.currentSpecId)
-          }
-        case FilesPayload(files) => files.map { f =>
-          // same constraint gate as the rows path: a parquet-mode branch
-          // stage must not fast-forward NULLs past a NOT NULL column
-          enforceNotNull(writeSchema, f.stats)
-          TaggedBatch(writeSchema, bs.base, bs.base,
-            FileStore(f.path, f.count, writeSchema),
-            batchId = st.mintBatchId(),
-            stats = f.stats, part = f.part, specId = f.specId)
-        }
-      }.toVector
+      val staged = batches.flatMap(_.files.map { f =>
+        // a branch stage must not fast-forward NULLs past a NOT NULL column
+        enforceNotNull(writeSchema, f.stats)
+        // ids minted at STAGING (not publish): branch DML keys its kills
+        // on them, and fast_forward preserves them
+        TaggedBatch(writeSchema, bs.base, bs.base,
+          FileStore(f.path, f.count, writeSchema),
+          batchId = st.mintBatchId(),
+          stats = f.stats, part = f.part, specId = f.specId)
+      }).toVector
       st.branches = st.branches.updated(branch,
         bs.copy(appends = bs.appends :+ staged))
       persistMeta(st)
@@ -2310,15 +2201,15 @@ object MemTables {
             " — drop or publish the branch(es) first")
       val (gone, kept) = st.batches.partition(_.removedAt <= olderThan)
       st.batches = kept
-      // file-backed batches physically dropped by expiry reclaim their
-      // files (the VACUUM half of retention) — EXCEPT files a surviving
-      // batch still references: a whole-batch rollback restore shares its
-      // original's store by reference, and deleting the file under the
-      // live copy would corrupt it
-      val keptFiles = kept.iterator.flatMap(_.store.file).toSet ++
-        st.branches.valuesIterator.flatMap(_.batches).flatMap(_.store.file)
-      gone.foreach(_.store.file.filterNot(keptFiles.contains)
-        .foreach(ParquetRows.delete))
+      // batches physically dropped by expiry reclaim their files (the
+      // VACUUM half of retention) — EXCEPT files a surviving batch still
+      // references: a whole-batch rollback restore shares its original's
+      // store by reference, and deleting the file under the live copy
+      // would corrupt it
+      val keptFiles = kept.iterator.map(_.store.path).toSet ++
+        st.branches.valuesIterator.flatMap(_.batches).map(_.store.path)
+      gone.iterator.map(_.store.path).filterNot(keptFiles.contains)
+        .foreach(ParquetRows.delete)
       st.earliestVersion = math.max(st.earliestVersion, olderThan)
       // keep the newest metadata entry at-or-before the horizon (it binds
       // reads AT the horizon) and every later one
@@ -2475,7 +2366,7 @@ object MemTables {
       versions: Option[Set[Long]],
       expectedVersion: Option[Long],
       writeSchema: StructType,
-      batches: Seq[Array[InternalRow]]): Unit = {
+      batches: Seq[TaskPayload]): Unit = {
     val st = tables.getOrElse(key,
       throw new IllegalStateException(s"mem table $key dropped mid-rewrite"))
     st.synchronized {
@@ -2503,33 +2394,16 @@ object MemTables {
           b.copy(removedAt = st.version)
         else b
       } ++ batches.filter(_.nonEmpty)
-        .flatMap(rs => mkBatches(st, writeSchema, RowsPayload(rs), st.version))
+        .flatMap(p => mkBatches(st, writeSchema, p, st.version))
       st.clearSortOrder()
       st.stamp("rewrite")
     }
   }
 
-  /** TABLE COMPACTION (`CALL graft.compact_table('t')`) — the maintenance
-    * op that keeps merge-on-read sustainable and small commits readable:
-    * fold every live batch's LIVE rows (DV overlays applied, schema
-    * projected by name into the CURRENT schema with tombstones — exactly
-    * the scan's own projection, so the current read is identical by
-    * construction) into one fresh batch at a new version. Old batches
-    * soft-remove at that version, so every pre-compaction snapshot stays
-    * an exact replay. The version is marked a COMPACTION: the change feed
-    * skips its remove/re-insert events (zero logical change — the Iceberg
-    * rule that incremental reads ignore `replace` snapshots). A no-op
-    * call (single batch, no DVs) burns no version. Driver-sized here; at
-    * 100 TB the projection is a distributed rewrite job, but the
-    * metadata protocol (replace-snapshot + CDC invisibility + time
-    * travel) is exactly this. Returns (batches compacted, rows written,
-    * version).
-    */
-  /** The compaction no-op rule — ONE definition for both storage modes
-    * (the driver-resident fold below and the file-backed distributed
-    * rewrite in [[CompactTableProcedure]]): nothing to compact when at
-    * most one live batch exists and no delete vector overlays it.
-    * Some(result) = skip, None = run.
+  /** The compaction no-op rule of `CALL graft.compact_table` (the
+    * distributed rewrite in [[CompactTableProcedure]]): nothing to compact
+    * when at most one live batch exists and no delete vector overlays it,
+    * so a no-op call burns no version. Some(result) = skip, None = run.
     */
   def compactNoop(st: State): Option[(Long, Long, Long)] = st.synchronized {
     val live = st.batches.filter(_.removedAt == Long.MaxValue)
@@ -2537,67 +2411,14 @@ object MemTables {
     else None
   }
 
-  def compact(key: String): (Long, Long, Long) = {
-    val st = required(key)
-    st.synchronized {
-      compactNoop(st).foreach(r => return r)
-      val live = st.batches.filter(_.removedAt == Long.MaxValue)
-      val schema = st.schema
-      val droppedAt = st.droppedAt
-      val eras = st.eras
-      // project — and VALIDATE — fully before the version bump: a type
-      // conflict must reject the compaction without burning a version slot.
-      // Projection is the scan's own era-resolved rule (renames resolve to
-      // write-time names, widened values convert), so the current read is
-      // identical by construction.
-      val projected: Array[InternalRow] = live.iterator.flatMap { b =>
-        val resolve = MemTables.sourceFieldName(eras, droppedAt)(_: String, b.writeVersion)
-        val srcIdx = schema.fields.map(f =>
-          resolve(f.name).map(n => b.schema.fieldNames.indexOf(n)).filter(_ >= 0).getOrElse(-1))
-        srcIdx.zipWithIndex.foreach { case (s, j) =>
-          if (s >= 0 && b.schema.fields(s).dataType != schema.fields(j).dataType &&
-              !MemTables.widens(b.schema.fields(s).dataType, schema.fields(j).dataType))
-            throw new IllegalStateException(
-              s"mem table $key: column ${schema.fields(j).name} was written as " +
-                s"${b.schema.fields(s).dataType.simpleString} but the table is bound to " +
-                s"${schema.fields(j).dataType.simpleString} — cannot compact, recreate")
-        }
-        val srcType = srcIdx.zipWithIndex.map { case (s, j) =>
-          if (s >= 0) b.schema.fields(s).dataType else schema.fields(j).dataType
-        }
-        val dead = effectiveKills(b, st.eqDeletes, eras, droppedAt).keySet
-        b.rows.iterator.zipWithIndex
-          .filterNot { case (_, i) => dead.contains(i) }
-          .map { case (r, _) =>
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-              Array.tabulate[Any](schema.length) { j =>
-                val s = srcIdx(j)
-                if (s >= 0 && !r.isNullAt(s))
-                  MemTables.widenValue(r.get(s, srcType(j)), srcType(j),
-                    schema.fields(j).dataType)
-                else null
-              }): InternalRow
-          }
-      }.toArray
-      st.version += 1
-      val removed = st.batches.map(b =>
-        if (b.removedAt == Long.MaxValue) b.copy(removedAt = st.version) else b)
-      st.batches =
-        if (projected.isEmpty) removed
-        else removed ++ mkBatches(st, schema, RowsPayload(projected), st.version)
-      st.clearSortOrder() // the fold concatenates batches in commit order
-      st.compactionVersions += st.version
-      st.stamp("compact")
-      (live.size.toLong, projected.length.toLong, st.version)
-    }
-  }
-
-  /** Atomic publish of a DISTRIBUTED compaction ([[CompactTableProcedure]]
-    * stays the driver-fold; `CALL graft.rewrite_data_files` runs the
-    * rewrite as a SPARK JOB — scan the current snapshot through the
-    * ordinary read path, optionally range-partition + sort, buffer
-    * task-side, publish here): soft-remove every live batch and commit
-    * the job's task batches at one new CDC-invisible version. Optimistic
+  /** Atomic publish of a DISTRIBUTED compaction (`compact_table` and
+    * `rewrite_data_files` run the rewrite as a SPARK JOB — scan the
+    * current snapshot through the ordinary read path, optionally
+    * range-partition + sort, write task-side, publish here): soft-remove
+    * every live batch and commit the job's task batches at one new
+    * CDC-invisible version (the change feed skips its remove/re-insert
+    * events — the Iceberg rule that incremental reads ignore `replace`
+    * snapshots), so every pre-compaction snapshot stays an exact replay. Optimistic
     * concurrency like [[replaceBatches]]: a commit interleaving the
     * rewrite job rejects the publish (the rewrite re-runs), never loses
     * an update. Returns (batches compacted, rows written, version).
@@ -2821,7 +2642,7 @@ object MemTables {
       epochId: Long,
       writeSchema: StructType,
       keyCols: Seq[String],
-      batches: Seq[TaskPayload]): Unit = {
+      batches: Seq[FilesPayload]): Unit = {
     val st = tables.getOrElse(key,
       throw new IllegalStateException(s"mem table $key dropped mid-write"))
     st.synchronized {
@@ -2839,41 +2660,28 @@ object MemTables {
         def tupleOf(r: InternalRow): Seq[Any] = idx.indices.map { j =>
           if (r.isNullAt(idx(j))) null else canonKey(r.get(idx(j), types(j)))
         }
-        // epoch key extraction: driver-resident payload rows key directly
-        // (they already live here); FILE payloads extract their distinct
+        // epoch key extraction: the epoch's files yield their distinct
         // key tuples in a one-task-per-file job when a session exists —
-        // together with the probe conversion below, a file-backed upsert
-        // epoch commit moves ZERO table or epoch content through the
-        // driver (sessionless callers stream driver-side, change-bounded)
+        // together with the probe conversion below, an upsert epoch
+        // commit moves ZERO table or epoch content through the driver
+        // (sessionless callers stream driver-side, change-bounded)
         val keySession = org.apache.spark.sql.SparkSession.getActiveSession
           .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        val (filePls, rowPls) = batches.partition(_.isInstanceOf[FilesPayload])
-        val rowKeys = rowPls.iterator
-          .flatMap { case RowsPayload(rs) => rs.iterator; case _ => Iterator.empty }
-          .map(tupleOf).filterNot(_.contains(null)).toSet
-        val epochPaths = filePls.flatMap {
-          case FilesPayload(fs) => fs.map(_.path); case _ => Nil
-        }
+        val epochPaths = batches.flatMap(_.files.map(_.path))
         // OVERSIZED epochs (a backfill re-ingesting 10⁸ keys) must not
         // collect their key set driver-ward nor broadcast it to every
         // executor: above the threshold the conversion joins epoch keys
         // against candidate-file rows ON THE CLUSTER instead
         // ([[DistributedDml.probeMatchesShuffled]]) — driver/broadcast
         // bytes stay flat in epoch size
-        val epochRowEstimate: Long = filePls.iterator.flatMap {
-          case FilesPayload(fs) => fs.iterator.map(_.count.toLong)
-          case _ => Iterator.empty
-        }.sum + rowPls.iterator.map {
-          case RowsPayload(rs) => rs.length.toLong; case _ => 0L
-        }.sum
+        val epochRowEstimate: Long = batches.iterator.map(_.rowTotal).sum
         val broadcastMaxRows =
           try org.apache.spark.sql.internal.SQLConf.get.getConfString(
             "spark.graft.upsert.broadcast-max-rows", "4000000").toLong
           catch { case _: Exception => 4000000L }
-        val shuffledConvert = st.storageDir.isDefined &&
-          keySession.isDefined && epochPaths.nonEmpty &&
+        val shuffledConvert = keySession.isDefined && epochPaths.nonEmpty &&
           epochRowEstimate > broadcastMaxRows
-        val fileKeys: Set[Seq[Any]] =
+        val keys: Set[Seq[Any]] =
           if (epochPaths.isEmpty || shuffledConvert) Set.empty
           else keySession match {
             case Some(s) =>
@@ -2897,12 +2705,11 @@ object MemTables {
                 .flatMap(p => ParquetRows.iterator(p, writeSchema))
                 .map(tupleOf).filterNot(_.contains(null)).toSet
           }
-        val keys = rowKeys ++ fileKeys
         val v = st.version + 1
         val fresh = batches.flatMap(rs => mkBatches(st, writeSchema, rs, v))
         // CONVERT-ON-WRITE (the Iceberg equality→position-delete shape):
-        // on file-backed tables the epoch's equality delete becomes
-        // POSITIONAL delete-vector entries at this commit — a
+        // the epoch's equality delete becomes POSITIONAL delete-vector
+        // entries at this commit — a
         // one-task-per-candidate-file probe job (strictly-older alive
         // batches, bounds/bloom-pruned per key column) finds the doomed
         // positions where the rows live, and NO probe record persists:
@@ -2912,14 +2719,13 @@ object MemTables {
         // scan of an eq-delete table paid O(older rows) in the driver).
         // Semantics are identical: kills land at this version, CDC
         // surfaces the same row-level deletes, time travel sees the rows
-        // before it. Driver-resident batches probe in-process (their
-        // rows already live here); sessionless callers keep the
-        // read-time equality-delete record.
+        // before it. Sessionless callers keep the read-time
+        // equality-delete record.
         val session = org.apache.spark.sql.SparkSession.getActiveSession
           .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         val converted: Map[Long, Array[Int]] =
           if (keys.isEmpty && !shuffledConvert) Map.empty
-          else if (st.storageDir.isEmpty || session.isEmpty) {
+          else if (session.isEmpty) {
             st.eqDeletes = st.eqDeletes :+ EqDelete(v, keyCols, keys)
             Map.empty
           } else {
@@ -2954,49 +2760,18 @@ object MemTables {
                 if (names.exists(_.isEmpty)) None
                 else Some(b -> names.map(_.get))
               }
-            val (fileB, memB) = older.partition(_._1.store.isInstanceOf[FileStore])
-            val tasks = fileB.map { case (b, names) =>
+            val tasks = older.map { case (b, names) =>
               val fields = b.schema.fields.filter(f => names.contains(f.name))
               val matchSchema = StructType(fields)
               val ki = names.map(n => matchSchema.fieldNames.indexOf(n)).toArray
-              DistributedDml.ProbeTask(b.batchId,
-                b.store.asInstanceOf[FileStore].path, matchSchema,
+              DistributedDml.ProbeTask(b.batchId, b.store.path, matchSchema,
                 ki, ki.map(matchSchema.fields(_).dataType),
                 if (b.dv.isEmpty) null else PosBitmap.toBytes(b.dv.keysIterator))
             }
-            // driver-resident candidate rows: probed in-process on the
-            // broadcast path; shipped into the cluster join as pairs on
-            // the shuffled path (their key tuples never reach the
-            // driver's working set there)
-            def memTuples(b: TaggedBatch, names: Seq[String]) = {
-              val ki = names.map(n => b.schema.fieldNames.indexOf(n))
-              val kt = ki.map(b.schema.fields(_).dataType)
-              b.rows.iterator.zipWithIndex.collect {
-                case (r, p) if !b.dv.contains(p) => (
-                  ki.indices.map { j =>
-                    if (r.isNullAt(ki(j))) null else canonKey(r.get(ki(j), kt(j)))
-                  }: Seq[Any], p)
-              }
-            }
-            if (shuffledConvert) {
-              val extraRows = memB.iterator.flatMap { case (b, names) =>
-                memTuples(b, names).collect {
-                  case (t, p) if !t.contains(null) => (t, (b.batchId, p))
-                }
-              }.toSeq
+            if (shuffledConvert)
               DistributedDml.probeMatchesShuffled(session.get.sparkContext,
-                tasks, epochPaths, writeSchema, idx.toArray, types.toArray,
-                rowKeys.toSeq, extraRows)
-            } else {
-              val jobMatched =
-                DistributedDml.probeMatches(session.get.sparkContext, tasks, keys)
-              val localMatched = memB.map { case (b, names) =>
-                b.batchId -> memTuples(b, names).collect {
-                  case (t, p) if !t.contains(null) && keys.contains(t) => p
-                }.toArray
-              }.filter(_._2.nonEmpty).toMap
-              jobMatched ++ localMatched
-            }
+                tasks, epochPaths, writeSchema, idx.toArray, types.toArray)
+            else DistributedDml.probeMatches(session.get.sparkContext, tasks, keys)
           }
         st.committedEpochs = st.committedEpochs.updated(queryId, done + epochId)
         st.version = v
@@ -3211,41 +2986,38 @@ object MemTables {
     * unsupported filter shapes BEFORE any state mutates. Caller holds the
     * table monitor.
     *
-    * FILE-BACKED candidates evaluate in a one-task-per-file Spark job
+    * Candidates evaluate in a one-task-per-file Spark job
     * ([[DistributedDml]]) that also writes copy-on-write survivor files
     * executor-side — table content never transits the driver (the 100 TB
     * DELETE shape; at gate scale the job doubles as the protocol drill).
-    * Driver-resident batches (and any caller without an active session)
-    * evaluate in-process as before. Returns the matched positions per
-    * batch plus the pre-built survivor stores for job-evaluated batches
-    * (consumed by [[applyRowKillsLocked]] so the CoW rewrite skips its
-    * driver materialization for exactly those batches).
+    * A caller without an active session evaluates in-process. Returns the
+    * matched positions per batch plus the pre-built survivor stores for
+    * job-evaluated batches (consumed by [[applyRowKillsLocked]] so the
+    * CoW rewrite skips its driver materialization for exactly those
+    * batches).
     */
   private def matchedRowsLocked(
       st: State, filters: Array[Filter])
       : (Map[Long, Array[Int]],
-         Map[Long, Option[(RowStore, Map[String, ColStats])]]) = {
+         Map[Long, Option[(FileStore, Map[String, ColStats])]]) = {
     val live = st.batches.filter(_.removedAt == Long.MaxValue)
     val candidates = candidateBatches(filters, st.specHistory, st.eras,
       st.droppedAt, live, st.columnDefaults)
     // predicate construction validates filter shapes driver-side for
     // EVERY candidate before any evaluation starts
     val preds = candidates.map(b => b.batchId -> predicateFor(st, b, filters)).toMap
-    val (fileBacked, memBacked) = candidates.partition(b =>
-      b.store.isInstanceOf[FileStore])
     val session = org.apache.spark.sql.SparkSession.getActiveSession
       .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
     val jobResults: Map[Long, DistributedDml.EvalResult] =
-      if (fileBacked.isEmpty || session.isEmpty) Map.empty
+      if (candidates.isEmpty || session.isEmpty) Map.empty
       else {
         // CoW tasks write survivors next to the table's data files; MoR
         // needs positions only (the kill lands in the delete vector)
         val survivorDir =
-          if (st.deleteMode == DeleteModeMor) None else st.storageDir
-        val plans = fileBacked.map(b => b -> matchPlanFor(st, b, filters))
+          if (st.deleteMode == DeleteModeMor) None else Some(st.storageDir)
+        val plans = candidates.map(b => b -> matchPlanFor(st, b, filters))
         val tasks = plans.map { case (b, (matchSchema, pred, _, pushable)) =>
-          val f = b.store.asInstanceOf[FileStore]
-          DistributedDml.EvalTask(b.batchId, f.path, b.schema,
+          DistributedDml.EvalTask(b.batchId, b.store.path, b.schema,
             matchSchema = matchSchema, pred = pred,
             survivorDir = survivorDir,
             declaredSort = st.declaredSortOrder, bloomCols = st.bloomCols.toSet,
@@ -3263,9 +3035,9 @@ object MemTables {
         }.toMap
         DistributedDml.run(session.get.sparkContext, tasks, kills)
       }
-    // driver-side evaluation: mem-resident batches, plus the file-backed
-    // ones when no session exists to host the job (non-Spark callers)
-    val local = memBacked ++ (if (jobResults.isEmpty) fileBacked else Vector.empty)
+    // driver-side evaluation when no session exists to host the job
+    // (non-Spark callers)
+    val local = if (session.isEmpty) candidates else Vector.empty
     val localDead = parMap(local) { b =>
       val dead = effectiveKills(b, st.eqDeletes, st.eras, st.droppedAt)
       val pred = preds(b.batchId)
@@ -3276,11 +3048,11 @@ object MemTables {
     val jobDead = jobResults.collect {
       case (id, r) if r.anyMatched => id -> r.matchedPositions
     }
-    val schemas = fileBacked.iterator.map(b => b.batchId -> b.schema).toMap
+    val schemas = candidates.iterator.map(b => b.batchId -> b.schema).toMap
     val preRewritten = jobResults.collect {
       case (id, r) if r.anyMatched =>
         id -> r.survivor.map(s =>
-          (FileStore(s.path, s.count, schemas(id), s.sorted): RowStore, s.stats))
+          (FileStore(s.path, s.count, schemas(id), s.sorted), s.stats))
     }
     (localDead ++ jobDead, preRewritten)
   }
@@ -3293,13 +3065,13 @@ object MemTables {
     */
   private def applyRowKillsLocked(
       st: State, deadByBatch: Map[Long, Array[Int]],
-      preRewritten: Map[Long, Option[(RowStore, Map[String, ColStats])]] =
+      preRewritten: Map[Long, Option[(FileStore, Map[String, ColStats])]] =
         Map.empty): Unit = {
     if (deadByBatch.isEmpty) return
     if (st.deleteMode == DeleteModeMor) {
       // MERGE-ON-READ: record matched positions in the batch's delete
-      // vector at this version — no row is copied (the rows array is
-      // shared by reference), old snapshots keep reading the rows, and
+      // vector at this version — no row is copied (the file is shared by
+      // reference), old snapshots keep reading the rows, and
       // the change feed reports row-level deletes at this version. The
       // read path pays the overlay filter instead.
       st.batches = st.batches.map { b =>
@@ -3311,11 +3083,11 @@ object MemTables {
       }
     } else {
       // job-evaluated batches arrive with their survivor files already
-      // executor-written (preRewritten); only the remainder — driver-
-      // resident batches — materializes here. Survivor reads/writes
-      // parallelize (file-open fixed costs); the batch-id mint and the
-      // batches swap stay serial under the monitor
-      val rewritten: Map[Long, Option[(RowStore, Map[String, ColStats])]] =
+      // executor-written (preRewritten); only the remainder — batches a
+      // sessionless caller evaluated in-process — materializes here.
+      // Survivor reads/writes parallelize (file-open fixed costs); the
+      // batch-id mint and the batches swap stay serial under the monitor
+      val rewritten: Map[Long, Option[(FileStore, Map[String, ColStats])]] =
         preRewritten ++ parMap(st.batches.filter(b =>
           deadByBatch.contains(b.batchId) && b.removedAt == Long.MaxValue &&
             !preRewritten.contains(b.batchId))) { b =>
@@ -4695,33 +4467,25 @@ final class MemScan(
         .filterNot(srcNames.contains)
         .flatMap(n => MemTables.defaultFor(meta.defaults)(n, b.writeVersion)
           .map(n -> _)).toMap
-      b.store match {
-        case MemTables.FileStore(path, _, _, _) =>
-          // file-backed: ship the PATH (+ positions to skip and the head
-          // cut); the executor streams the parquet rows itself — the
-          // driver never materializes data for a scan. A cut at the full
-          // row count is no cut (lets the columnar reader skip position
-          // tracking entirely on the plain-scan fast path).
-          MemPartition(b.schema, b.version, srcNames, Array.empty,
-            dead.filter(_ < cut), b.batchId, key,
-            file = Some(path), cut = if (cut >= b.rowCount) -1 else cut,
-            defaults = defaults,
-            pushFilters = MemScan.batchPushFilters(
-              boundSchema, skipFilters, srcNames, b.schema))
-        case _ =>
-          val rows = if (cut == b.rowCount) b.rows else b.rows.take(cut)
-          MemPartition(b.schema, b.version, srcNames, rows, dead.filter(_ < cut),
-            b.batchId, key, defaults = defaults)
-      }
+      // ship the PATH (+ positions to skip and the head cut); the
+      // executor streams the parquet rows itself — the driver never
+      // materializes data for a scan. A cut at the full row count is no
+      // cut (lets the columnar reader skip position tracking entirely on
+      // the plain-scan fast path).
+      MemPartition(b.schema, b.version, srcNames, b.store.path,
+        dead.filter(_ < cut), b.batchId, key,
+        cut = if (cut >= b.rowCount) -1 else cut,
+        defaults = defaults,
+        pushFilters = MemScan.batchPushFilters(
+          boundSchema, skipFilters, srcNames, b.schema))
     }.toArray
     // uniform columnar verdict: vectorized reads only when EVERY planned
-    // partition is file-backed and projectable column-for-column (Spark
-    // rejects mixed columnar/row partitions in one scan). Row-level
-    // operation scans keep the row path — their rewrite plumbing consumes
-    // rows anyway and correctness outweighs the decode win there.
+    // partition is projectable column-for-column (Spark rejects mixed
+    // columnar/row partitions in one scan). Row-level operation scans
+    // keep the row path — their rewrite plumbing consumes rows anyway and
+    // correctness outweighs the decode win there.
     val columnarOk = rowLevel.isEmpty && parts.nonEmpty &&
-      parts.forall(mp => mp.file.isDefined &&
-        MemScan.columnarSupported(boundSchema, mp))
+      parts.forall(MemScan.columnarSupported(boundSchema, _))
     if (columnarOk) parts.map(mp => mp.copy(columnar = true): InputPartition)
     else parts.map(mp => mp: InputPartition)
   }
@@ -5041,13 +4805,13 @@ object MemScan {
       else p.srcNames.get(f.name)
         .map(n => p.batchSchema.fieldNames.indexOf(n)).getOrElse(-1))
 
-  /** Can this partition serve the target columnarly? File-backed, every
-    * resolved column type-identical (widening keeps the row path's
+  /** Can this partition serve the target columnarly? Every resolved
+    * column type-identical (widening keeps the row path's
     * per-value conversion) and vectorizable, every unresolved column's
     * default expressible as a constant vector.
     */
   private[sources] def columnarSupported(target: StructType, p: MemPartition): Boolean =
-    p.file.isDefined && srcIndexes(target, p).zip(target.fields).forall {
+    srcIndexes(target, p).zip(target.fields).forall {
       case (s, f) if s >= 0 =>
         // sameType: nested types differ by element/field NULLABILITY
         // between a write schema and the table binding — the decoded
@@ -5129,7 +4893,7 @@ object MemScan {
           case _ => false
         }
 
-      /** VECTORIZED read of one file-backed batch ([[ParquetColumnar]]):
+      /** VECTORIZED read of one batch ([[ParquetColumnar]]):
         * whole column chunks decode into Spark's own `ColumnarBatch`;
         * DV kills and head cuts filter via a survivor index map over the
         * parquet ROW INDEX (positions exact even under row-group skips),
@@ -5139,7 +4903,7 @@ object MemScan {
       override def createColumnarReader(partition: InputPartition)
           : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
         val p = partition.asInstanceOf[MemPartition]
-        val path = p.file.get
+        val path = p.file
         val srcIdx = srcIndexes(target, p)
         val srcOrdinals = srcIdx.filter(_ >= 0).distinct.sorted
         val ordToReq = srcOrdinals.zipWithIndex.toMap
@@ -5269,65 +5033,50 @@ object MemScan {
             }
             new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
           }
-        p.file match {
-          case Some(path) if p.pushFilters.nonEmpty =>
-            // FILE-BACKED with a parquet-pushable predicate (the row
-            // path serves evolved-schema scans the columnar projection
-            // declines — they prune row groups all the same): positions
-            // come from the parquet row index, so DV skips and head cuts
-            // stay exact under skipped groups
-            new PartitionReader[InternalRow] {
-              private val it = ParquetRows.positioned(
-                path, p.batchSchema, p.pushFilters.toSeq)
-              private var pos = -1
-              private var cur: InternalRow = _
-              override def next(): Boolean = {
-                while (it.hasNext) {
-                  val r = it.next()
-                  pos = it.pos.toInt
-                  if (p.cut >= 0 && pos >= p.cut) { it.close(); return false }
-                  if (!p.dead.contains(pos)) { cur = r; return true }
-                }
-                false
+        if (p.pushFilters.nonEmpty)
+          // a parquet-pushable predicate (the row path serves
+          // evolved-schema scans the columnar projection declines —
+          // they prune row groups all the same): positions come from
+          // the parquet row index, so DV skips and head cuts stay
+          // exact under skipped groups
+          new PartitionReader[InternalRow] {
+            private val it = ParquetRows.positioned(
+              p.file, p.batchSchema, p.pushFilters.toSeq)
+            private var pos = -1
+            private var cur: InternalRow = _
+            override def next(): Boolean = {
+              while (it.hasNext) {
+                val r = it.next()
+                pos = it.pos.toInt
+                if (p.cut >= 0 && pos >= p.cut) { it.close(); return false }
+                if (!p.dead.contains(pos)) { cur = r; return true }
               }
-              override def get(): InternalRow = project(cur, pos)
-              override def close(): Unit = it.close()
+              false
             }
-          case Some(path) =>
-            // FILE-BACKED storage plane: the executor streams the parquet
-            // rows itself (the driver shipped only the path), skipping
-            // DV-dead positions and stopping at a pushed head's cut —
-            // early close releases the file without draining it
-            new PartitionReader[InternalRow] {
-              private val it = ParquetRows.iterator(path, p.batchSchema)
-              private var pos = -1
-              private var cur: InternalRow = _
-              override def next(): Boolean = {
-                while (it.hasNext) {
-                  pos += 1
-                  if (p.cut >= 0 && pos >= p.cut) { it.close(); return false }
-                  val r = it.next()
-                  if (!p.dead.contains(pos)) { cur = r; return true }
-                }
-                false
+            override def get(): InternalRow = project(cur, pos)
+            override def close(): Unit = it.close()
+          }
+      else
+          // the executor streams the parquet rows itself (the driver
+          // shipped only the path), skipping DV-dead positions and
+          // stopping at a pushed head's cut — early close releases the
+          // file without draining it
+          new PartitionReader[InternalRow] {
+            private val it = ParquetRows.iterator(p.file, p.batchSchema)
+            private var pos = -1
+            private var cur: InternalRow = _
+            override def next(): Boolean = {
+              while (it.hasNext) {
+                pos += 1
+                if (p.cut >= 0 && pos >= p.cut) { it.close(); return false }
+                val r = it.next()
+                if (!p.dead.contains(pos)) { cur = r; return true }
               }
-              override def get(): InternalRow = project(cur, pos)
-              override def close(): Unit = it.close()
+              false
             }
-          case None =>
-            val rows = p.rows
-            new PartitionReader[InternalRow] {
-              private var i = -1
-              override def next(): Boolean = {
-                i += 1
-                // merge-on-read: skip DV-deleted positions
-                while (i < rows.length && p.dead.contains(i)) i += 1
-                i < rows.length
-              }
-              override def get(): InternalRow = project(rows(i), i)
-              override def close(): Unit = ()
-            }
-        }
+            override def get(): InternalRow = project(cur, pos)
+            override def close(): Unit = it.close()
+          }
       }
     }
 
@@ -5431,12 +5180,13 @@ object MemScan {
   }
 }
 
-/** Write half of a row-level operation: plain task-buffered commit
-  * messages (same [[MemWriterFactory]] protocol as any batch write), but
-  * the driver publish goes through [[MemTables.replaceBatches]] — replace
-  * exactly the batch versions the operation's scan read (whole table only
-  * when the runtime group filter never fired), rejecting a concurrently
-  * advanced table version instead of erasing the interleaved commit.
+/** Write half of a row-level operation: executor-written files (same
+  * [[MemWriterFactory]] protocol as any batch write), but the driver
+  * publish goes through [[MemTables.replaceBatches]] — replace exactly the
+  * batch versions the operation's scan read (whole table only when the
+  * runtime group filter never fired), rejecting a concurrently advanced
+  * table version instead of erasing the interleaved commit. An aborted
+  * operation reclaims its task files.
   */
 final class MemRowLevelWriteBuilder(
     key: String, writeSchema: StructType, state: MemRowLevelState)
@@ -5444,13 +5194,14 @@ final class MemRowLevelWriteBuilder(
   override def build(): Write = new Write {
     override def toBatch: BatchWrite = new BatchWrite {
       override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new MemWriterFactory
+        MemWriterFactory.forTable(key, writeSchema)
       override def commit(messages: Array[WriterCommitMessage]): Unit =
         // CAS-reject replay re-runs replaceBatches' optimistic checks
         MemTables.withCommitRetry(key)(MemTables.replaceBatches(
           key, state.groupVersions, state.scannedVersion, writeSchema,
-          messages.map(_.asInstanceOf[MemCommitMessage].rows).toSeq))
-      override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+          MemWriterFactory.payloadsOf(messages)))
+      override def abort(messages: Array[WriterCommitMessage]): Unit =
+        MemWriterFactory.reclaim(messages)
     }
   }
 }
@@ -5607,21 +5358,19 @@ final class MemDeltaWriterFactory
     }
 }
 
-/** Rows travel inside the partition — serializable, so the read path is
-  * correct on a real cluster, not just local mode — along with the schema
-  * they were written under (the decode contract for the projection) and
-  * the ERA-RESOLVED target→source name map (computed at planning, where
-  * the evolution metadata lives): bound columns absent from the map read
-  * NULL for this batch (added later, dropped-and-readded, or predating a
-  * rename chain).
+/** One planned batch: its parquet PATH (executors stream the file) along
+  * with the schema it was written under (the decode contract for the
+  * projection) and the ERA-RESOLVED target→source name map (computed at
+  * planning, where the evolution metadata lives): bound columns absent
+  * from the map read NULL for this batch (added later,
+  * dropped-and-readded, or predating a rename chain).
   */
 final case class MemPartition(
     batchSchema: StructType, version: Long, srcNames: Map[String, String],
-    rows: Array[InternalRow], dead: Set[Int] = Set.empty, batchId: Long = -1L,
+    file: String, dead: Set[Int] = Set.empty, batchId: Long = -1L,
     partKey: Option[Seq[Any]] = None,
-    // FILE-BACKED batches ship their parquet path (rows stays empty) and
-    // the planned head cut (-1 = no cut); executors stream the file
-    file: Option[String] = None, cut: Int = -1,
+    // the planned head cut (-1 = no cut)
+    cut: Int = -1,
     // target column → internal EXISTS-default for columns this batch
     // predates (`ALTER ADD COLUMN ... DEFAULT`); unresolved fields read
     // this instead of NULL
@@ -5790,7 +5539,6 @@ final class MemStreamingWrite(
 
 final class MemStreamingWriterFactory(underlying: MemWriterFactory)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  def this() = this(new MemWriterFactory())
   override def createWriter(
       partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
     underlying.createWriter(partitionId, taskId)
@@ -5833,16 +5581,15 @@ final class MemBatchWrite(key: String, mode: MemWriteMode, writeSchema: StructTy
   // an aborted JOB whose tasks already committed their messages leaves
   // executor-written files that will never publish — reclaim them (a
   // speculative twin whose message Spark discarded is reclaimed the same
-  // way via the driver's abort call; rows-mode messages hold no files)
+  // way via the driver's abort call)
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     MemWriterFactory.reclaim(messages)
 }
 
-final case class MemCommitMessage(rows: Array[InternalRow]) extends WriterCommitMessage
 final case class MemFilesMessage(files: Vector[FileManifest]) extends WriterCommitMessage
 
-/** Everything one write TASK needs to run the file-backed storage plane
-  * executor-side (`graft.storage=parquet`): where to put files, the write
+/** Everything one write TASK needs to write its files executor-side:
+  * where to put files, the write
   * schema, and the partition spec to split under (with its id, so the
   * publish can reject a racing spec evolution). Serialized with the
   * factory to every task.
@@ -5853,54 +5600,37 @@ final case class MemParquetWrite(
     bloomCols: Seq[String] = Nil,
     sortCols: Seq[String] = Nil)
 
-/** Per-task writer. Default (row) mode buffers rows into the commit
-  * message. Parquet mode does what a real table format's write task does:
-  * partition-SPLIT the buffered rows, write one snappy parquet file per
-  * tuple, compute the publish stats, and ship only the MANIFESTS — the
-  * driver never sees a row, an aborted/speculative task's files are
-  * simply never committed (orphans at worst, never visible), and the
-  * same atomic driver commit publishes paths instead of payloads.
+/** Per-task writer — what a real table format's write task does:
+  * partition-SPLIT the rows, write one snappy parquet file per tuple,
+  * compute the publish stats, and ship only the MANIFESTS — the driver
+  * never sees a row, an aborted/speculative task's files are simply never
+  * committed (orphans at worst, never visible), and the atomic driver
+  * commit publishes paths. Rows STREAM into per-partition-tuple open
+  * writers as they arrive — task memory is writer state, never the
+  * partition's rows (the 100 TB write shape); stats and the NDV sketch
+  * accumulate incrementally in the same pass.
   */
-final class MemWriterFactory(parquet: Option[MemParquetWrite] = None)
-    extends DataWriterFactory {
+final class MemWriterFactory(pw: MemParquetWrite) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    parquet match {
-      case Some(pw) =>
-        // file-backed plane: STREAM rows into per-partition-tuple open
-        // writers as they arrive — task memory is writer state, never the
-        // partition's rows (the 100 TB write shape); stats and the NDV
-        // sketch accumulate incrementally in the same pass
-        new DataWriter[InternalRow] {
-          private val files = new TaskFileWriter(pw, s"part-$partitionId-$taskId")
-          override def write(record: InternalRow): Unit = files.write(record)
-          override def commit(): WriterCommitMessage = MemFilesMessage(files.finish())
-          override def abort(): Unit = files.abort()
-          override def close(): Unit = ()
-        }
-      case None =>
-        // driver-resident mode: rows travel in the commit message by the
-        // mode's own (gate-scale) contract
-        new DataWriter[InternalRow] {
-          private val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-          // rows are reused by the caller — copy() detaches each one
-          override def write(record: InternalRow): Unit = buf += record.copy()
-          override def commit(): WriterCommitMessage = MemCommitMessage(buf.toArray)
-          override def abort(): Unit = buf.clear()
-          override def close(): Unit = ()
-        }
+    new DataWriter[InternalRow] {
+      private val files = new TaskFileWriter(pw, s"part-$partitionId-$taskId")
+      override def write(record: InternalRow): Unit = files.write(record)
+      override def commit(): WriterCommitMessage = MemFilesMessage(files.finish())
+      override def abort(): Unit = files.abort()
+      override def close(): Unit = ()
     }
 }
 
 object MemWriterFactory {
-  /** The factory for one table's writes: parquet-mode when the table
-    * declared `graft.storage=parquet`, row-mode otherwise.
+  /** The factory for one table's writes, bound to its directory, current
+    * partition spec, bloom columns and declared sort order.
     */
-  def forTable(key: String, writeSchema: StructType): MemWriterFactory =
-    new MemWriterFactory(MemTables.get(key).flatMap { st =>
-      st.storageDir.map(dir =>
-        MemParquetWrite(dir, writeSchema, st.partitioning, st.currentSpecId,
-          st.bloomCols, st.declaredSortOrder))
-    })
+  def forTable(key: String, writeSchema: StructType): MemWriterFactory = {
+    val st = MemTables.get(key).getOrElse(
+      throw new IllegalStateException(s"mem table $key dropped mid-write"))
+    new MemWriterFactory(MemParquetWrite(st.storageDir, writeSchema,
+      st.partitioning, st.currentSpecId, st.bloomCols, st.declaredSortOrder))
+  }
 
   /** Delete the files of never-to-publish commit messages (driver abort
     * path). Files of a publish REJECTED inside the commit call itself
@@ -5915,9 +5645,8 @@ object MemWriterFactory {
       case _ => ()
     }
 
-  def payloadsOf(messages: Array[WriterCommitMessage]): Seq[MemTables.TaskPayload] =
+  def payloadsOf(messages: Array[WriterCommitMessage]): Seq[MemTables.FilesPayload] =
     messages.toSeq.map {
-      case MemCommitMessage(rows) => MemTables.RowsPayload(rows)
       case MemFilesMessage(files) => MemTables.FilesPayload(files)
       case other => throw new IllegalStateException(
         s"unexpected commit message ${other.getClass.getName}")
@@ -6043,29 +5772,16 @@ object MemChangesSource {
     // uniform row-level kill map per batch (position -> death version)
     def killsOf(b: MemTables.TaggedBatch): Map[Int, Long] =
       MemTables.effectiveKills(b, eqDeletes, metaAt.eras, metaAt.droppedAt)
-    // ONE event partition: file-backed batches ship the PATH plus the
-    // event's position selection (executors stream the parquet — neither
-    // the CDC read nor the MV refresh window it feeds ever pulls rows
-    // through the driver or task closures); driver-resident batches ship
-    // the selected rows as before. `only` = emit exactly these sorted
-    // positions; else emit everything not in (sorted) `skip`.
+    // ONE event partition: the batch's PATH plus the event's position
+    // selection (executors stream the parquet — neither the CDC read nor
+    // the MV refresh window it feeds ever pulls rows through the driver
+    // or task closures). `only` = emit exactly these sorted positions;
+    // else emit everything not in (sorted) `skip`.
     def eventOf(b: MemTables.TaggedBatch, tpe: String, at: Long,
         skip: Array[Int], only: Array[Int]): InputPartition =
-      b.store match {
-        case fs: MemTables.FileStore =>
-          MemChangesFilePartition(fs.schema, srcMap(b), fs.path,
-            if (skip == null || skip.isEmpty) null else PosBitmap.toBytes(skip),
-            if (only == null) null else PosBitmap.toBytes(only), tpe, at)
-        case _ =>
-          val rows =
-            if (only != null) only.map(b.rows)
-            else if (skip.isEmpty) b.rows
-            else {
-              val s = skip.toSet
-              b.rows.indices.filterNot(s).map(b.rows).toArray
-            }
-          MemChangesPartition(b.schema, srcMap(b), rows, tpe, at)
-      }
+      MemChangesFilePartition(b.store.schema, srcMap(b), b.store.path,
+        if (skip == null || skip.isEmpty) null else PosBitmap.toBytes(skip),
+        if (only == null) null else PosBitmap.toBytes(only), tpe, at)
     // COMPACTION versions are physical reorganizations with zero logical
     // change — their batch replacements are invisible to the feed (the
     // Iceberg replace-snapshot rule); DV delete events are untouched
@@ -6115,7 +5831,7 @@ object MemChangesSource {
     (inserts ++ deletes ++ dvDeletes).map(p => p: InputPartition).toArray
   }
 
-  /** Reader over [[MemChangesPartition]]s: by-name projection of the data
+  /** Reader over [[MemChangesFilePartition]]s: by-name projection of the data
     * columns into `fullSchema` (minus the 2 change columns), then the
     * event-constant `_change_type` / `_commit_version`.
     */
@@ -6125,8 +5841,7 @@ object MemChangesSource {
 
       /** By-name projector of one event's rows into the target schema
         * (rename-resolved via srcNames, widened per value) plus the two
-        * event-constant change columns — shared by the row-resident and
-        * file-streaming readers.
+        * event-constant change columns.
         */
       private def projector(
           batchSchema: StructType, srcNames: Map[String, String],
@@ -6165,52 +5880,41 @@ object MemChangesSource {
         }
       }
 
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        partition match {
-          case p: MemChangesPartition =>
-            val rows = p.rows
-            val project =
-              projector(p.batchSchema, p.srcNames, p.changeType, p.commitVersion)
-            new PartitionReader[InternalRow] {
-              private var i = -1
-              override def next(): Boolean = { i += 1; i < rows.length }
-              override def get(): InternalRow = project(rows(i))
-              override def close(): Unit = ()
-            }
-          case p: MemChangesFilePartition =>
-            // stream the file by position: `only` emits exactly those
-            // positions; else everything not in `skip` (both sorted by
-            // the bitmap decode)
-            val project =
-              projector(p.batchSchema, p.srcNames, p.changeType, p.commitVersion)
-            val only = if (p.onlyBm == null) null else PosBitmap.toArray(p.onlyBm)
-            val skip =
-              if (p.skipBm == null) Array.empty[Int] else PosBitmap.toArray(p.skipBm)
-            val it = ParquetRows.iterator(p.path, p.batchSchema)
-            new PartitionReader[InternalRow] {
-              private var pos = -1
-              private var oIdx = 0 // cursor into `only`
-              private var sIdx = 0 // cursor into `skip`
-              private var current: InternalRow = _
-              override def next(): Boolean = {
-                current = null
-                while (current == null && it.hasNext &&
-                    (only == null || oIdx < only.length)) {
-                  val r = it.next()
-                  pos += 1
-                  if (only != null) {
-                    if (pos == only(oIdx)) { oIdx += 1; current = r }
-                  } else {
-                    while (sIdx < skip.length && skip(sIdx) < pos) sIdx += 1
-                    if (sIdx >= skip.length || skip(sIdx) != pos) current = r
-                  }
-                }
-                if (current == null) { it.close(); false } else true
+      override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+        val p = partition.asInstanceOf[MemChangesFilePartition]
+        // stream the file by position: `only` emits exactly those
+        // positions; else everything not in `skip` (both sorted by
+        // the bitmap decode)
+        val project =
+          projector(p.batchSchema, p.srcNames, p.changeType, p.commitVersion)
+        val only = if (p.onlyBm == null) null else PosBitmap.toArray(p.onlyBm)
+        val skip =
+          if (p.skipBm == null) Array.empty[Int] else PosBitmap.toArray(p.skipBm)
+        val it = ParquetRows.iterator(p.path, p.batchSchema)
+        new PartitionReader[InternalRow] {
+          private var pos = -1
+          private var oIdx = 0 // cursor into `only`
+          private var sIdx = 0 // cursor into `skip`
+          private var current: InternalRow = _
+          override def next(): Boolean = {
+            current = null
+            while (current == null && it.hasNext &&
+                (only == null || oIdx < only.length)) {
+              val r = it.next()
+              pos += 1
+              if (only != null) {
+                if (pos == only(oIdx)) { oIdx += 1; current = r }
+              } else {
+                while (sIdx < skip.length && skip(sIdx) < pos) sIdx += 1
+                if (sIdx >= skip.length || skip(sIdx) != pos) current = r
               }
-              override def get(): InternalRow = project(current)
-              override def close(): Unit = it.close()
             }
+            if (current == null) { it.close(); false } else true
+          }
+          override def get(): InternalRow = project(current)
+          override def close(): Unit = it.close()
         }
+      }
     }
 }
 
@@ -6434,17 +6138,10 @@ object MemTableMicroBatchStream {
         .filterNot(srcNames.contains)
         .flatMap(n => MemTables.defaultFor(meta.defaults)(n, b.writeVersion)
           .map(n -> _)).toMap
-      b.store match {
-        case MemTables.FileStore(path, _, _, _) =>
-          // file-backed: the streamed window ships PATHS too — a
-          // micro-batch over a parquet table must not materialize
-          // driver-side any more than a snapshot scan does
-          MemPartition(b.schema, b.version, srcNames, Array.empty, dead,
-            b.batchId, None, file = Some(path), defaults = defaults)
-        case _ =>
-          MemPartition(b.schema, b.version, srcNames, b.rows, dead, b.batchId,
-            None, defaults = defaults)
-      }
+      // the streamed window ships PATHS too — a micro-batch must not
+      // materialize driver-side any more than a snapshot scan does
+      MemPartition(b.schema, b.version, srcNames, b.store.path, dead,
+        b.batchId, None, defaults = defaults)
     }
     if (from < 0)
       batches.filter(b => b.version <= to && b.removedAt > to).map { b =>
@@ -6471,16 +6168,7 @@ object MemTableMicroBatchStream {
   }
 }
 
-/** One change event: the SELECTED rows (whole batch for commit inserts;
-  * the event's row slice for removal/DV deletes — sliced at planning so a
-  * partition ships only the rows it surfaces).
-  */
-final case class MemChangesPartition(
-    batchSchema: StructType, srcNames: Map[String, String], rows: Array[InternalRow],
-    changeType: String, commitVersion: Long)
-    extends InputPartition
-
-/** FILE-BACKED change event: the driver plans the PATH plus the event's
+/** One change event: the driver plans the PATH plus the event's
   * position selection and executors stream the parquet — the change
   * feed's analogue of the snapshot scan's path shipping, so a CDC read
   * (and therefore every incremental MV refresh window) never

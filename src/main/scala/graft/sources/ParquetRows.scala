@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, P
 import org.apache.spark.sql.types.StructType
 
 /** Executor-grade parquet I/O of `InternalRow`s for the graft table
-  * format's FILE-BACKED storage plane (`graft.storage=parquet`): write
+  * format's storage plane: write
   * tasks call [[ParquetRows.write]] to persist their buffered rows as one
   * snappy parquet file per partition split and ship only the MANIFEST
   * (path, row count, partition tuple, column bounds) in their commit
@@ -258,8 +258,8 @@ object ParquetRows {
   val readCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Materialize a whole file (driver-side content paths: equality-delete
-    * probes, DELETE row evaluation, the driver-resident compaction fold —
-    * gate-scale by contract, documented at each call site).
+    * probes, sessionless DELETE row evaluation — gate-scale by contract,
+    * documented at each call site).
     */
   def read(path: String, schema: StructType): Array[InternalRow] = {
     readCalls.incrementAndGet()

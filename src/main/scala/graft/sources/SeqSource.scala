@@ -321,12 +321,9 @@ final case class SeqScan(
   *    (creation rejected) so the generated tables cannot be shadowed.
   */
 object SeqCatalog {
-  /** Session conf naming the storage plane a propertyless CREATE TABLE
-    * inherits: `'parquet'` = file-backed (executor-written files +
-    * durable metadata), anything else/unset = driver-resident. The
-    * engine's session profile ([[graft.core.EngineSession]]) sets it to
-    * `parquet`, so every gate, bench and test table runs the scale plane
-    * by default.
+  /** A session conf name that selects nothing: every table is
+    * file-backed whatever it holds, and the catalog never reads it. Kept
+    * only because the benchmark harness's session still sets it.
     */
   val DefaultStorageConf = "spark.graft.defaultTableStorage"
 }
@@ -465,7 +462,6 @@ class SeqCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog
       case "drop_view" => DropViewProcedure
       case "remove_orphan_files" => RemoveOrphanFilesProcedure
       case "unload_table" => UnloadTableProcedure
-      case "migrate_storage" => MigrateStorageProcedure
       case "create_materialized_view" => CreateMaterializedViewProcedure
       case "refresh_materialized_view" => RefreshMaterializedViewProcedure
       case "drop_materialized_view" => DropMaterializedViewProcedure
@@ -476,7 +472,7 @@ class SeqCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog
           "table_history, create_tag, drop_tag, " +
           "create_branch, drop_branch, fast_forward, replace_partition_spec, " +
           "create_view, drop_view, remove_orphan_files, unload_table, " +
-          "migrate_storage, create_materialized_view, " +
+          "create_materialized_view, " +
           "refresh_materialized_view, drop_materialized_view)")
     }
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
@@ -497,7 +493,6 @@ class SeqCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog
       Identifier.of(namespace, "drop_view"),
       Identifier.of(namespace, "remove_orphan_files"),
       Identifier.of(namespace, "unload_table"),
-      Identifier.of(namespace, "migrate_storage"),
       Identifier.of(namespace, "create_materialized_view"),
       Identifier.of(namespace, "refresh_materialized_view"),
       Identifier.of(namespace, "drop_materialized_view"),
@@ -747,22 +742,7 @@ class SeqCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog
     // keep the FULL user property map so SHOW TBLPROPERTIES echoes what
     // CREATE accepted (silently dropping a property would misreport)
     import scala.jdk.CollectionConverters._
-    // SESSION-DEFAULT storage plane (the Iceberg `write.format.default`
-    // shape): a CREATE that does not choose a storage mode inherits
-    // `spark.graft.defaultTableStorage` — how a deployment makes the
-    // file-backed plane (executor-written parquet + durable metadata)
-    // the norm without touching every DDL statement. An explicit
-    // `'graft.storage'` on the statement always wins.
-    val propsMap = {
-      val m = properties.asScala.toMap
-      if (m.contains(MemTables.StorageProp)) m
-      else org.apache.spark.sql.internal.SQLConf.get
-        .getConfString(SeqCatalog.DefaultStorageConf, "") match {
-        case "parquet" => m + (MemTables.StorageProp -> "parquet")
-        case _ => m
-      }
-    }
-    (mode, propsMap, spec)
+    (mode, properties.asScala.toMap, spec)
   }
 
   /** ATOMIC CTAS/RTAS ([[org.apache.spark.sql.connector.catalog
@@ -933,7 +913,7 @@ class SeqCatalog extends org.apache.spark.sql.connector.catalog.TableCatalog
   }
 
   /** `ALTER TABLE ... RENAME TO ...` — a pure registry move: batches,
-    * history, refs, and (for file-backed tables) the storage directory
+    * history, refs, and the storage directory
     * are untouched; the durable metadata document re-persists under the
     * new key so disk recovery follows the rename. Views referencing the
     * OLD name fail late with an error naming the view (the pinned
@@ -1257,18 +1237,12 @@ object CompactTableProcedure
     val key = input.getUTF8String(0).toString
     val st = MemTables.get(key).getOrElse(
       throw new IllegalArgumentException(s"mem table $key does not exist"))
-    // file-backed tables compact as a DISTRIBUTED rewrite job (executor
-    // read -> streaming write -> manifest publish — the same shape as
-    // rewrite_data_files with the scan layout kept): the driver-side fold
-    // would pull every live file through the driver, the round-12
-    // verdict's flagged ceiling. Driver-resident tables keep the fold —
-    // their rows live on the driver by that mode's own contract.
-    val (nBatches, nRows, version) = st.storageDir match {
-      case Some(_) =>
-        MemTables.compactNoop(st).getOrElse(RewriteJobs.run(
-          org.apache.spark.sql.SparkSession.active, key, ""))
-      case None => MemTables.compact(key)
-    }
+    // a DISTRIBUTED rewrite job (executor read -> streaming write ->
+    // manifest publish — the same shape as rewrite_data_files with the
+    // scan layout kept): a driver-side fold would pull every live file
+    // through the driver
+    val (nBatches, nRows, version) = MemTables.compactNoop(st).getOrElse(
+      RewriteJobs.run(org.apache.spark.sql.SparkSession.active, key, ""))
     ProcedureResults.scan(s"GraftCompactTable $key", outSchema,
       Seq(Seq(nBatches, nRows, version)))
   }
@@ -1580,49 +1554,10 @@ object UnloadTableProcedure
     val key = input.getUTF8String(0).toString
     val dir = MemTables.get(key)
       .getOrElse(throw new IllegalArgumentException(s"mem table $key does not exist"))
-      .storageDir.getOrElse("")
+      .storageDir
     MemTables.unload(key)
     ProcedureResults.scan(s"GraftUnloadTable $key", outSchema,
       Seq(Seq(key, dir)))
-  }
-}
-
-/** `CALL graft.migrate_storage('t', 'parquet')` — promote a
-  * driver-resident table onto the file-backed plane in place
-  * ([[MemTables.migrateStorage]]): batches become parquet files +
-  * manifests, the durable metadata plane starts persisting, and all
-  * future writes land executor-side. Logical contents are bit-identical
-  * (no version minted, CDC-invisible). The operational path off the
-  * gate-scale default mode without recreating the table.
-  */
-object MigrateStorageProcedure
-    extends org.apache.spark.sql.connector.catalog.procedures.UnboundProcedure
-    with org.apache.spark.sql.connector.catalog.procedures.BoundProcedure {
-  import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter}
-  import org.apache.spark.sql.connector.read.Scan
-  import org.apache.spark.sql.types.{LongType, StringType}
-
-  override def name(): String = "migrate_storage"
-  override def description(): String =
-    "rewrite a driver-resident table's batches as parquet files + " +
-      "manifests; logical contents unchanged"
-  override def bind(inputType: StructType): BoundProcedure = this
-  override def isDeterministic: Boolean = false
-  override def parameters(): Array[ProcedureParameter] = Array(
-    ProcedureParameter.in("table", StringType).build(),
-    ProcedureParameter.in("target", StringType)
-      .defaultValue("'parquet'").build())
-
-  private val outSchema = new StructType()
-    .add("batches_migrated", LongType, nullable = false)
-    .add("storage_dir", StringType, nullable = false)
-
-  override def call(input: org.apache.spark.sql.catalyst.InternalRow): java.util.Iterator[Scan] = {
-    val key = input.getUTF8String(0).toString
-    val target = input.getUTF8String(1).toString
-    val (n, dir) = MemTables.migrateStorage(key, target)
-    ProcedureResults.scan(s"GraftMigrateStorage $key -> $target", outSchema,
-      Seq(Seq(n, dir)))
   }
 }
 
@@ -2051,7 +1986,7 @@ private[sources] object RewriteJobs {
     val maxDeadRatio = st.createProps.get(MemTables.AutoCompactDeadRatioProp)
       .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
       .filter(r => r > 0.0 && r <= 1.0)
-    if ((threshold <= 0 && maxDeadRatio.isEmpty) || st.storageDir.isEmpty) return
+    if (threshold <= 0 && maxDeadRatio.isEmpty) return
     val (live, deadRows, storedRows) = st.synchronized {
       val lv = st.batches.filter(_.removedAt == Long.MaxValue)
       (lv.size, lv.iterator.map(_.dv.size.toLong).sum,
@@ -2220,39 +2155,26 @@ private[sources] object RewriteJobs {
         df = df.coalesce(outputN)
       }
     }
-    // the write-task protocol, inline. Two storage planes:
-    //  - file-backed (`graft.storage=parquet`): each task SPLITS, WRITES
-    //    its parquet files, and computes stats IN THE EXECUTOR; the driver
-    //    collects only MANIFESTS — publish cost tracks the manifest count,
-    //    never the data (the 100 TB rewrite shape);
-    //  - driver-resident (default): each task buffers its partition and
-    //    ships the rows; the driver publishes only committed buffers,
-    //    atomically (gate-scale by the mode's own contract).
-    val payloads: Seq[MemTables.TaskPayload] = st.storageDir match {
-      case Some(dir) =>
-        val pw = MemParquetWrite(dir, schema, st.partitioning, st.currentSpecId,
-          st.bloomCols)
-        df.queryExecution.toRdd
-          .mapPartitionsWithIndex { (pid, it) =>
-            // STREAMING write: rows flow straight into per-tuple open
-            // writers ([[TaskFileWriter]]) — the task never buffers its
-            // partition, so the rewrite's memory ceiling is writer state
-            // regardless of partition size (the 100 TB shape)
-            val files = new TaskFileWriter(pw, s"rewrite-$pid")
-            try {
-              it.foreach(files.write)
-              if (files.isEmpty) Iterator.empty
-              else Iterator(
-                MemTables.FilesPayload(files.finish()): MemTables.TaskPayload)
-            } catch { case e: Throwable => files.abort(); throw e }
-          }
-          .collect().toSeq
-      case None =>
-        df.queryExecution.toRdd
-          .mapPartitions(it => Iterator(
-            MemTables.RowsPayload(it.map(_.copy()).toArray): MemTables.TaskPayload))
-          .collect().toSeq
-    }
+    // the write-task protocol, inline: each task SPLITS, WRITES its
+    // parquet files, and computes stats IN THE EXECUTOR; the driver
+    // collects only MANIFESTS — publish cost tracks the manifest count,
+    // never the data (the 100 TB rewrite shape)
+    val pw = MemParquetWrite(st.storageDir, schema, st.partitioning,
+      st.currentSpecId, st.bloomCols)
+    val payloads: Seq[MemTables.TaskPayload] = df.queryExecution.toRdd
+      .mapPartitionsWithIndex { (pid, it) =>
+        // STREAMING write: rows flow straight into per-tuple open writers
+        // ([[TaskFileWriter]]) — the task never buffers its partition, so
+        // the rewrite's memory ceiling is writer state regardless of
+        // partition size (the 100 TB shape)
+        val files = new TaskFileWriter(pw, s"rewrite-$pid")
+        try {
+          it.foreach(files.write)
+          if (files.isEmpty) Iterator.empty
+          else Iterator(MemTables.FilesPayload(files.finish()): MemTables.TaskPayload)
+        } catch { case e: Throwable => files.abort(); throw e }
+      }
+      .collect().toSeq
     MemTables.publishCompaction(key, expected, schema, payloads, sortCols.toSeq)
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.MemTables._
 
 /** The DURABLE half of the graft table format — the analogue of Iceberg's
-  * `metadata.json` + merged manifest list: every publish of a file-backed
-  * table (`graft.storage=parquet`) serializes the table's COMPLETE
+  * `metadata.json` + merged manifest list: every publish of a table
+  * serializes the table's COMPLETE
   * metadata plane — version ledger, schema-era history, refs
   * (tags/branches), partition-spec timeline, per-batch manifests (path,
   * count, partition tuple, column bounds, delete vector), equality
@@ -171,12 +171,11 @@ object TableMetadata {
   // original's store shares the manifest file too — identical payload
   // by construction.
 
-  /** The manifest file name a batch resolves to — None for a batch with
-    * no file store (driver-resident). The orphan sweep uses this to keep
-    * every referenced manifest.
+  /** The manifest file name a batch resolves to. The orphan sweep uses
+    * this to keep every referenced manifest.
     */
-  def manifestNameOf(b: TaggedBatch): Option[String] =
-    b.store.file.map(p => manifestName(p, b.writeVersion, b.specId))
+  def manifestNameOf(b: TaggedBatch): String =
+    manifestName(b.store.path, b.writeVersion, b.specId)
 
   private def manifestName(path: String, writeVersion: Long, specId: Int): String = {
     val key = s"$path|$writeVersion|$specId"
@@ -189,16 +188,7 @@ object TableMetadata {
 
   /** Write one batch's immutable manifest file if absent; returns its name. */
   private def ensureManifest(dir: String, b: TaggedBatch): String = {
-    val path = b.store match {
-      case FileStore(p, _, _, _) => p
-      case MemStore(_) =>
-        // by construction unreachable for a file-backed table (every
-        // publish path routes rows through storeFor, which writes a
-        // file when a storage dir exists) — fail the commit loudly
-        // rather than embed row payloads in the metadata plane
-        throw new IllegalStateException(
-          "file-backed table holds a driver-resident batch — cannot persist")
-    }
+    val path = b.store.path
     val name = manifestName(path, b.writeVersion, b.specId)
     MetaIO.writeOnce(dir, name, {
       val o = mapper.createObjectNode()
@@ -209,7 +199,7 @@ object TableMetadata {
       st.put("path",
         if (path.startsWith(dir + "/")) path.substring(dir.length + 1) else path)
       st.put("count", b.store.count)
-      st.put("schema", b.store.asInstanceOf[FileStore].schema.json)
+      st.put("schema", b.store.schema.json)
       o.set[JsonNode]("store", st)
       val stats = mapper.createObjectNode()
       b.stats.foreach { case (col, s) =>
@@ -350,7 +340,8 @@ object TableMetadata {
   /** Serialize the complete metadata plane and atomically replace
     * `<dir>/metadata.json`. Caller holds the state's monitor.
     */
-  def write(st: State): Unit = st.storageDir.foreach { dir =>
+  def write(st: State): Unit = {
+    val dir = st.storageDir
     val root = mapper.createObjectNode()
     // the CAS generation — FIRST field by contract ([[MetaIO.commitCas]]
     // verifies it with a header read, not a full parse)
@@ -560,7 +551,7 @@ object TableMetadata {
       .map { case (k, v) => k -> v.asText }.toMap
     val specHistory = iter(root.get("spec-history")).map(specIn).toVector
     val st = new State(schema, root.get("delete-mode").asText, createProps,
-      specHistory.head, Some(dir), key)
+      specHistory.head, dir, key)
     st.specHistory = specHistory
     st.schema = schema
     // identity: persisted uuid, or (pre-uuid metadata) the storage dir's

@@ -7,9 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites: the engine's own session profile
   * on 2 cores, as the reference's fixture builds the job's session
   * (`tests/conftest.py:17-33` — local[2], 2 shuffle partitions, UI off,
-  * UTC). Specs therefore run the file-backed storage plane the gate runs;
-  * a driver-resident table is created inside
-  * [[graft.core.EngineSession.driverResident]].
+  * UTC).
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session

@@ -47,7 +47,7 @@ class CtasSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet') AS " +
       "SELECT CAST(id % 3 AS INT) AS g, id AS k FROM range(0, 90)")
     val st = MemTables.get("ctas_pq").get
-    assert(st.storageDir.isDefined)
+    assert(new java.io.File(st.storageDir).isDirectory)
     assert(st.partitioning === Seq(MemTables.IdentityPart("g")))
     assert(spark.table("graft.ctas_pq").count() === 90L)
     // partition pruning works on the CTAS result like any created table

@@ -30,7 +30,7 @@ class DvSidecarSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet', " +
       "'graft.delete-mode'='merge-on-read')")
     spark.sql("INSERT INTO graft.dv_big SELECT id, id FROM range(0, 30000)")
-    val dir = MemTables.get("dv_big").get.storageDir.get
+    val dir = MemTables.get("dv_big").get.storageDir
     // a tiny delete: DVs stay inline, no sidecar yet
     spark.sql("DELETE FROM graft.dv_big WHERE v < 10")
     val smallLen = metaLen(dir)
@@ -76,7 +76,7 @@ class DvSidecarSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet', " +
       "'graft.delete-mode'='merge-on-read')")
     spark.sql("INSERT INTO graft.dv_gc SELECT id, id FROM range(0, 10000)")
-    val dir = MemTables.get("dv_gc").get.storageDir.get
+    val dir = MemTables.get("dv_gc").get.storageDir
     spark.sql("DELETE FROM graft.dv_gc WHERE v < 3000")
     val firstGen = dvFiles(dir).map(_.getName).toSet
     assert(firstGen.nonEmpty)

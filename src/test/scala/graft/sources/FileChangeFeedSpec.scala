@@ -34,7 +34,7 @@ class FileChangeFeedSpec extends SparkSpec {
     spark.sql("UPDATE graft.cf_file SET v = v + 1 WHERE k >= 140") // v4: ±images
     spark.sql("TRUNCATE TABLE graft.cf_file") // v5: batch removals, kills carved
     val st = MemTables.get("cf_file").get
-    assert(st.batches.forall(_.store.file.isDefined),
+    assert(st.batches.forall(_.store.path.endsWith(".parquet")),
       "precondition: every batch file-backed")
 
     val before = ParquetRows.readCalls.get()

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.core.EngineSession
 
 /** The DURABLE metadata plane ([[TableMetadata]] + [[MemTables.unload]] /
   * disk recovery): a file-backed table's version ledger, schema eras,
@@ -16,6 +15,14 @@ class MetadataPersistSpec extends SparkSpec {
 
   private def drop(names: String*): Unit =
     names.foreach(n => spark.sql(s"DROP TABLE IF EXISTS graft.$n"))
+
+  /** One write task's files for `key`, as a streaming epoch's tasks ship them. */
+  private def files(key: String, schema: org.apache.spark.sql.types.StructType,
+      rows: org.apache.spark.sql.catalyst.InternalRow*): MemTables.FilesPayload = {
+    val w = MemWriterFactory.forTable(key, schema).createWriter(0, 0L)
+    rows.foreach(w.write)
+    MemWriterFactory.payloadsOf(Array(w.commit())).head
+  }
 
   test("unload + recover round-trips the full protocol surface") {
     catalogOn(); drop("mp_life")
@@ -108,22 +115,14 @@ class MetadataPersistSpec extends SparkSpec {
     drop("mp_spec")
   }
 
-  test("unload of a driver-resident table is rejected; drop removes metadata") {
-    catalogOn(); drop("mp_mem")
-    EngineSession.driverResident(spark)(spark.sql("CREATE TABLE graft.mp_mem (k BIGINT)"))
-    spark.sql("INSERT INTO graft.mp_mem VALUES (1)")
-    val e = intercept[Exception](spark.sql("CALL graft.unload_table('mp_mem')"))
-    assert(e.getMessage.contains("driver-resident"), e.getMessage)
-    assert(spark.table("graft.mp_mem").count() === 1L)
-    drop("mp_mem")
-
-    // DROP of a file-backed table removes the directory — no zombie
-    // recovery of a dropped table
+  test("drop removes metadata") {
+    // DROP of a table removes the directory — no zombie recovery of a
+    // dropped table
     drop("mp_gone")
     spark.sql("CREATE TABLE graft.mp_gone (k BIGINT) " +
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.mp_gone VALUES (1)")
-    val dir = MemTables.get("mp_gone").get.storageDir.get
+    val dir = MemTables.get("mp_gone").get.storageDir
     assert(new java.io.File(dir, "metadata.json").isFile,
       "every publish writes the metadata document")
     drop("mp_gone")
@@ -161,11 +160,11 @@ class MetadataPersistSpec extends SparkSpec {
     val st0 = MemTables.get("mp_ts").get
     val schema = st0.schema
     MemTables.commitEpochUpsert("mp_ts", "q-meta", 0L, schema, Seq("k"),
-      Seq(MemTables.RowsPayload(Array(
+      Seq(files("mp_ts", schema,
         org.apache.spark.sql.catalyst.InternalRow(
           2L, org.apache.spark.unsafe.types.UTF8String.fromString("B2")),
         org.apache.spark.sql.catalyst.InternalRow(
-          3L, org.apache.spark.unsafe.types.UTF8String.fromString("c")))))) // v2
+          3L, org.apache.spark.unsafe.types.UTF8String.fromString("c"))))) // v2
     val times = st0.versionTimes
     val want = spark.sql("SELECT k, v FROM graft.mp_ts ORDER BY k").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -187,9 +186,9 @@ class MetadataPersistSpec extends SparkSpec {
       "epoch ledger must survive — a post-restart re-commit must stay a no-op")
     // idempotence across the restart: same epoch re-commits as a no-op
     MemTables.commitEpochUpsert("mp_ts", "q-meta", 0L, st.schema, Seq("k"),
-      Seq(MemTables.RowsPayload(Array(
+      Seq(files("mp_ts", st.schema,
         org.apache.spark.sql.catalyst.InternalRow(
-          9L, org.apache.spark.unsafe.types.UTF8String.fromString("dup"))))))
+          9L, org.apache.spark.unsafe.types.UTF8String.fromString("dup")))))
     assert(spark.sql("SELECT count(*) FROM graft.mp_ts").head().getLong(0) === 3L)
     drop("mp_ts")
   }
@@ -200,7 +199,7 @@ class MetadataPersistSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.mp_maint SELECT id, concat('r', id) FROM range(0, 8)")
     spark.sql("INSERT INTO graft.mp_maint VALUES (100, 'x')")
-    val dir = MemTables.get("mp_maint").get.storageDir.get
+    val dir = MemTables.get("mp_maint").get.storageDir
 
     // procedures must NOT depend on a read having faulted the table in:
     // each runs against a cold registry (the restart-survival contract)
@@ -269,22 +268,29 @@ class MetadataPersistSpec extends SparkSpec {
 
   test("expiry prunes equality deletes that no retained batch can feel") {
     catalogOn(); drop("mp_eqprune")
-    // driver-resident: a file-backed table converts each epoch's equality
-    // delete to positional DVs at commit, leaving no record to prune
-    EngineSession.driverResident(spark) {
-      spark.sql("CREATE TABLE graft.mp_eqprune (k BIGINT, v BIGINT) " +
-        "TBLPROPERTIES ('graft.upsert-keys'='k', " +
-        "'graft.delete-mode'='merge-on-read')")
-    }
+    spark.sql("CREATE TABLE graft.mp_eqprune (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('graft.upsert-keys'='k', " +
+      "'graft.delete-mode'='merge-on-read')")
     val st0 = MemTables.get("mp_eqprune").get
+    import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.catalyst.InternalRow
     def epoch(id: Long, rows: (Long, Long)*): Unit =
       MemTables.commitEpochUpsert("mp_eqprune", "q-prune", id, st0.schema,
-        Seq("k"), Seq(MemTables.RowsPayload(
-          rows.map(r => InternalRow(r._1, r._2)).toArray)))
-    epoch(0L, 1L -> 10L, 2L -> 20L) // v1
-    epoch(1L, 2L -> 21L, 3L -> 30L) // v2: eq-delete on {2}
-    epoch(2L, 3L -> 31L) // v3: eq-delete on {3}
+        Seq("k"), Seq(files("mp_eqprune", st0.schema,
+          rows.map(r => InternalRow(r._1, r._2)): _*)))
+    // with a session, each epoch's equality delete converts to positional
+    // DVs at commit and leaves no record to prune; a caller with no
+    // active or default session keeps the read-time record
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      epoch(0L, 1L -> 10L, 2L -> 20L) // v1
+      epoch(1L, 2L -> 21L, 3L -> 30L) // v2: eq-delete on {2}
+      epoch(2L, 3L -> 31L) // v3: eq-delete on {3}
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
     val st = MemTables.get("mp_eqprune").get
     assert(st.eqDeletes.size === 3, st.eqDeletes.toString)
     // compaction folds everything into one post-delete batch (version 4);

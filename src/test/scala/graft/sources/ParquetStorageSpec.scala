@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.core.EngineSession
 import org.apache.spark.sql.sources.{Filter, LessThan}
 
 /** The FILE-BACKED storage plane (`graft.storage=parquet`,
@@ -72,10 +71,8 @@ class ParquetStorageSpec extends SparkSpec {
     // every batch is file-backed: the store is a manifest, the bytes are
     // a real parquet file on disk, and the stats came from the write task
     live.foreach { b =>
-      val f = b.store.file
-      assert(f.isDefined, "batch must be file-backed")
-      assert(new java.io.File(f.get).isFile, f.get)
-      assert(b.store.isInstanceOf[MemTables.FileStore])
+      val f = b.store.path
+      assert(new java.io.File(f).isFile, f)
       assert(b.stats.nonEmpty)
     }
     // the read streams the files back exactly
@@ -95,7 +92,7 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.pq_part SELECT id, CAST(id % 4 AS INT) FROM range(0, 40)")
     val live = liveBatches("pq_part")
     assert(live.map(_.part).distinct.size === 4)
-    live.foreach(b => assert(b.store.file.isDefined))
+    live.foreach(b => assert(b.store.path.endsWith(".parquet")))
     // partition-pure files: each file's rows recompute to its tuple
     val spec = MemTables.get("pq_part").get.partitioning
     live.foreach { b =>
@@ -121,7 +118,7 @@ class ParquetStorageSpec extends SparkSpec {
     assert(spark.table("graft.pq_mor").count() === 40L)
     // the files were NOT rewritten: same single file, DV overlay at read
     val live = liveBatches("pq_mor")
-    assert(live.forall(_.store.file.isDefined))
+    assert(live.forall(_.store.path.endsWith(".parquet")))
     assert(live.map(_.dv.size).sum === 10)
     assert(spark.sql("SELECT count(*) FROM graft.pq_mor VERSION AS OF 1")
       .head().getLong(0) === 50L)
@@ -163,7 +160,7 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("CALL graft.rewrite_data_files('pq_rw', 'k')")
     val after = liveBatches("pq_rw")
     assert(after.map(_.batchId).toSet.intersect(before).isEmpty)
-    after.foreach(b => assert(b.store.file.isDefined,
+    after.foreach(b => assert(b.store.path.endsWith(".parquet"),
       "rewrite output must be file-backed (manifest publish)"))
     // the sorted claim serves TOP-N trimming over files
     val head = spark.sql("SELECT k FROM graft.pq_rw ORDER BY k LIMIT 3")
@@ -180,13 +177,13 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.pq_uniform SELECT id, id FROM range(0, 30)")
     spark.sql("DELETE FROM graft.pq_uniform WHERE k % 3 = 0") // CoW survivors
     liveBatches("pq_uniform").foreach(b =>
-      assert(b.store.file.isDefined, "CoW survivor must be file-backed"))
+      assert(b.store.path.endsWith(".parquet"), "CoW survivor must be file-backed"))
     assert(spark.table("graft.pq_uniform").count() === 20L)
     spark.sql("INSERT INTO graft.pq_uniform VALUES (100, 100)")
     spark.sql("CALL graft.compact_table('pq_uniform')")
     val folded = liveBatches("pq_uniform")
     folded.foreach(b =>
-      assert(b.store.file.isDefined, "compaction output must be file-backed"))
+      assert(b.store.path.endsWith(".parquet"), "compaction output must be file-backed"))
     assert(spark.table("graft.pq_uniform").count() === 21L)
     drop("pq_uniform")
   }
@@ -208,7 +205,7 @@ class ParquetStorageSpec extends SparkSpec {
     assert(r.getLong(1) === 900L) // 1000 − 100 deleted
     assert(spark.table("graft.pq_distcomp").count() === 900L)
     val folded = liveBatches("pq_distcomp")
-    assert(folded.forall(_.store.file.isDefined))
+    assert(folded.forall(_.store.path.endsWith(".parquet")))
     assert(folded.forall(_.dv.isEmpty), "DVs are applied, not carried")
     // single-live-batch fast path stays a no-op
     assert(spark.sql("CALL graft.compact_table('pq_distcomp')")
@@ -229,10 +226,10 @@ class ParquetStorageSpec extends SparkSpec {
     val live = liveBatches("pq_manytuple")
     assert(live.map(_.part.head).distinct.size === 7)
     live.foreach { b =>
-      assert(b.store.file.isDefined)
+      assert(b.store.path.endsWith(".parquet"))
       // partition purity: every file holds one g value
       val g = b.part.head.asInstanceOf[Int]
-      val rows = ParquetRows.read(b.store.file.get, b.schema)
+      val rows = ParquetRows.read(b.store.path, b.schema)
       assert(rows.forall(_.getInt(0) == g))
       // incremental stats match the rows: bounds, nulls, exact NDV
       val ks = rows.map(_.getLong(1))
@@ -311,55 +308,12 @@ class ParquetStorageSpec extends SparkSpec {
     drop("pq_zorder", "pq_zpart")
   }
 
-  test("migrate_storage promotes a driver-resident table in place") {
-    catalogOn(); drop("pq_migrate")
-    EngineSession.driverResident(spark) {
-      spark.sql("CREATE TABLE graft.pq_migrate (k BIGINT, v STRING) " +
-        "TBLPROPERTIES ('graft.delete-mode'='merge-on-read')")
-    }
-    spark.sql("INSERT INTO graft.pq_migrate " +
-      "SELECT id, concat('v', id) FROM range(0, 50)") // v1
-    spark.sql("DELETE FROM graft.pq_migrate WHERE k < 5") // v2: DVs
-    spark.sql("INSERT OVERWRITE graft.pq_migrate " +
-      "SELECT id, concat('w', id) FROM range(0, 20)") // v3: history batch
-    val want = spark.sql("SELECT k, v FROM graft.pq_migrate ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val wantV2 = spark.sql("SELECT count(*) FROM graft.pq_migrate VERSION AS OF 2")
-      .head().getLong(0)
-    val versionBefore = MemTables.get("pq_migrate").get.version
-
-    val r = spark.sql(
-      "CALL graft.migrate_storage('pq_migrate', 'parquet')").collect()(0)
-    assert(r.getLong(0) >= 3L, "current + history batches all migrate")
-    val st = MemTables.get("pq_migrate").get
-    assert(st.storageDir.isDefined)
-    assert(st.version === versionBefore, "migration mints no version")
-    assert(st.batches.forall(_.store.file.isDefined),
-      "every batch (history included) is file-backed after migration")
-    assert(spark.sql("SELECT k, v FROM graft.pq_migrate ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq === want)
-    assert(spark.sql("SELECT count(*) FROM graft.pq_migrate VERSION AS OF 2")
-      .head().getLong(0) === wantV2)
-
-    // the migrated table ACQUIRED durability: unload + recover round-trips
-    spark.sql("CALL graft.unload_table('pq_migrate')")
-    assert(spark.sql("SELECT k, v FROM graft.pq_migrate ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq === want)
-    // future writes land as files
-    spark.sql("INSERT INTO graft.pq_migrate VALUES (999, 'new')")
-    assert(liveBatches("pq_migrate").forall(_.store.file.isDefined))
-    // idempotent: second call is a no-op
-    assert(spark.sql("CALL graft.migrate_storage('pq_migrate', 'parquet')")
-      .collect()(0).getLong(0) === 0L)
-    drop("pq_migrate")
-  }
-
   test("dropped branch reclaims its staged files; aborts reclaim messages") {
     catalogOn(); drop("pq_branch")
     spark.sql("CREATE TABLE graft.pq_branch (k BIGINT, v BIGINT) TBLPROPERTIES (" +
       "'graft.storage'='parquet', 'graft.delete-mode'='merge-on-read')")
     spark.sql("INSERT INTO graft.pq_branch VALUES (1, 10)") // v1
-    val dir = MemTables.get("pq_branch").get.storageDir.get
+    val dir = MemTables.get("pq_branch").get.storageDir
     def files() = Option(new java.io.File(dir).list())
       .map(_.count(_.endsWith(".parquet"))).getOrElse(0)
     val mainFiles = files()
@@ -373,7 +327,7 @@ class ParquetStorageSpec extends SparkSpec {
     // abort reclaim: a committed-but-never-published task message's files
     // are deleted by the driver's abort call
     val pw = MemParquetWrite(dir, MemTables.get("pq_branch").get.schema, Nil, 0)
-    val w = new MemWriterFactory(Some(pw)).createWriter(0, 99L)
+    val w = new MemWriterFactory(pw).createWriter(0, 99L)
     w.write(org.apache.spark.sql.catalyst.InternalRow(7L, 70L))
     val msg = w.commit()
     assert(files() === mainFiles + 1)
@@ -381,6 +335,30 @@ class ParquetStorageSpec extends SparkSpec {
       MemTables.get("pq_branch").get.schema).abort(Array(msg))
     assert(files() === mainFiles)
     drop("pq_branch")
+  }
+
+  test("a failed copy-on-write UPDATE leaves the table's files and version unchanged") {
+    catalogOn(); drop("pq_cow_fail")
+    spark.sql("CREATE TABLE graft.pq_cow_fail (k BIGINT, s STRING)")
+    // three one-row batches, then a large batch whose LAST row fails the
+    // SET expression: the small tasks commit their files before the
+    // failing task throws, so only the driver's abort can reclaim them
+    (0 until 3).foreach(i =>
+      spark.sql(s"INSERT INTO graft.pq_cow_fail VALUES ($i, 'ok')"))
+    spark.sql("INSERT INTO graft.pq_cow_fail SELECT id, " +
+      "CASE WHEN id = 20009 THEN 'bad' ELSE 'ok' END FROM range(10, 20010, 1, 1)")
+    val st = MemTables.get("pq_cow_fail").get
+    def parquetFiles() = Option(new java.io.File(st.storageDir).list())
+      .getOrElse(Array.empty[String]).filter(_.endsWith(".parquet")).toSet
+    val filesBefore = parquetFiles()
+    val versionBefore = st.version
+    intercept[Exception](spark.sql("UPDATE graft.pq_cow_fail SET k = CASE " +
+      "WHEN s = 'bad' THEN raise_error('boom') ELSE k + 1 END WHERE k >= 0"))
+    assert(st.version === versionBefore)
+    assert(parquetFiles() === filesBefore,
+      "task files of the failed rewrite must be reclaimed")
+    assert(spark.table("graft.pq_cow_fail").count() === 20003L)
+    drop("pq_cow_fail")
   }
 
   test("rollback restores share files; expiry never deletes a live copy's file") {
@@ -392,11 +370,11 @@ class ParquetStorageSpec extends SparkSpec {
     spark.sql("CALL graft.rollback_table('pq_rb', 1)") // v3: restore
     // the whole-batch restore SHARES the original's file by reference
     val live = liveBatches("pq_rb")
-    assert(live.forall(_.store.file.isDefined))
-    val liveFiles = live.flatMap(_.store.file).toSet
+    assert(live.forall(_.store.path.endsWith(".parquet")))
+    val liveFiles = live.map(_.store.path).toSet
     val removed = MemTables.get("pq_rb").get.batches
       .filter(_.removedAt != Long.MaxValue)
-    assert(removed.flatMap(_.store.file).toSet.subsetOf(liveFiles),
+    assert(removed.map(_.store.path).toSet.subsetOf(liveFiles),
       "restore must share the original's file")
     // expiry drops the originals but must NOT delete the shared file
     spark.sql("CALL graft.expire_snapshots('pq_rb', 3)")
@@ -412,7 +390,7 @@ class ParquetStorageSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.storage'='parquet')")
     spark.sql("INSERT INTO graft.pq_orphan SELECT id FROM range(0, 10)")
     spark.sql("INSERT OVERWRITE graft.pq_orphan SELECT id FROM range(0, 5)")
-    val dir = MemTables.get("pq_orphan").get.storageDir.get
+    val dir = MemTables.get("pq_orphan").get.storageDir
     // plant two orphans: a crashed task's file (never published)
     val schema = MemTables.get("pq_orphan").get.schema
     for (i <- 1 to 2)
@@ -448,7 +426,7 @@ class ParquetStorageSpec extends SparkSpec {
     catalogOn(); drop("pq_life")
     spark.sql("CREATE TABLE graft.pq_life (k BIGINT) " +
       "TBLPROPERTIES ('graft.storage'='parquet')")
-    val dir = MemTables.get("pq_life").get.storageDir.get
+    val dir = MemTables.get("pq_life").get.storageDir
     spark.sql("INSERT INTO graft.pq_life SELECT id FROM range(0, 10)") // v1
     spark.sql("INSERT OVERWRITE graft.pq_life SELECT id FROM range(0, 5)") // v2 truncate
     def files() = Option(new java.io.File(dir).list()).map(_.count(_.endsWith(".parquet"))).getOrElse(0)

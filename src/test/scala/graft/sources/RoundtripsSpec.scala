@@ -522,7 +522,8 @@ class RoundtripsSpec extends SparkSpec {
       val w = new graft.sources.MemStreamingWrite(
         "spec_epoch", "query-1", truncate = false, schema)
       def msg(v: Long) = {
-        val dw = new graft.sources.MemStreamingWriterFactory().createWriter(0, 0L, 0L)
+        val dw = new graft.sources.MemStreamingWriterFactory(
+          graft.sources.MemWriterFactory.forTable("spec_epoch", schema)).createWriter(0, 0L, 0L)
         dw.write(row(v)); dw.commit()
       }
       w.commit(0L, Array(msg(1L)))
@@ -645,7 +646,8 @@ class RoundtripsSpec extends SparkSpec {
         Seq(RowsPayload(rows(1L)))) // v1
       // a rewrite that scanned v1 publishes fine when nothing interleaved
       graft.sources.MemTables.replaceBatches(
-        "spec_rlo_conflict", Some(Set(1L)), Some(1L), schema, Seq(rows(2L))) // v2
+        "spec_rlo_conflict", Some(Set(1L)), Some(1L), schema,
+        Seq(RowsPayload(rows(2L)))) // v2
       val st = graft.sources.MemTables.get("spec_rlo_conflict").get
       assert(st.version === 2L)
       // a DISJOINT APPEND racing the next rewrite is NOT a conflict: the
@@ -655,7 +657,8 @@ class RoundtripsSpec extends SparkSpec {
       graft.sources.MemTables.commit("spec_rlo_conflict", truncate = false, schema,
         Seq(RowsPayload(rows(50L)))) // v3 — interleaved append
       graft.sources.MemTables.replaceBatches(
-        "spec_rlo_conflict", Some(Set(2L)), Some(2L), schema, Seq(rows(3L))) // v4
+        "spec_rlo_conflict", Some(Set(2L)), Some(2L), schema,
+        Seq(RowsPayload(rows(3L)))) // v4
       assert(st.version === 4L)
       val live = st.batches.filter(_.removedAt == Long.MaxValue)
       assert(live.flatMap(_.rows).map(_.getLong(0)).sorted === Vector(3L, 50L))
@@ -1378,18 +1381,23 @@ class RoundtripsSpec extends SparkSpec {
     // epoch 0 -> v1: keys 0..4 (key 0 carries a NULL value) — duplicate
     // key 4 within the epoch is KEPT (in-epoch dedup is the producer's
     // job; the equality delete applies strictly before its own version)
-    import graft.sources.MemTables.RowsPayload
+    // one write task's files, as a streaming epoch's tasks ship them
+    def files(rows: org.apache.spark.sql.catalyst.InternalRow*) = {
+      val w = graft.sources.MemWriterFactory.forTable(key, schema).createWriter(0, 0L)
+      rows.foreach(w.write)
+      graft.sources.MemWriterFactory.payloadsOf(Array(w.commit())).head
+    }
     graft.sources.MemTables.commitEpochUpsert(key, "q1", 0L, schema, Seq("k"),
-      Seq(RowsPayload(Array(row(1L, 10L), row(2L, 20L))),
-        RowsPayload(Array(row(3L, 30L), row(4L, 40L), row(4L, 41L), row(0L, null)))))
+      Seq(files(row(1L, 10L), row(2L, 20L)),
+        files(row(3L, 30L), row(4L, 40L), row(4L, 41L), row(0L, null))))
     val st = graft.sources.MemTables.get(key).get
     assert(st.version === 1L)
     // epoch 1 -> v2: re-ingest keys 2 and 4
     graft.sources.MemTables.commitEpochUpsert(key, "q1", 1L, schema, Seq("k"),
-      Seq(RowsPayload(Array(row(2L, 200L), row(4L, 400L)))))
+      Seq(files(row(2L, 200L), row(4L, 400L))))
     // idempotent per epoch: a post-restart re-commit is a no-op
     graft.sources.MemTables.commitEpochUpsert(key, "q1", 1L, schema, Seq("k"),
-      Seq(RowsPayload(Array(row(9L, 999L)))))
+      Seq(files(row(9L, 999L))))
     assert(st.version === 2L)
     def rows(sql: String) = spark.sql(sql).collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))).sorted.toSeq
@@ -1632,12 +1640,14 @@ class RoundtripsSpec extends SparkSpec {
     val schema = new org.apache.spark.sql.types.StructType().add("k", "long")
     graft.sources.MemTables.create("spec_abort", schema)
     try {
-      val writer = new graft.sources.MemWriterFactory().createWriter(0, 0L)
+      val writer = graft.sources.MemWriterFactory.forTable("spec_abort", schema)
+        .createWriter(0, 0L)
       writer.write(org.apache.spark.sql.catalyst.InternalRow(1L))
       writer.abort() // task failed: message discarded, nothing committed
       assert(graft.sources.MemTables.get("spec_abort").get.batches.isEmpty)
       // a second attempt commits; only ITS message is published
-      val retry = new graft.sources.MemWriterFactory().createWriter(0, 1L)
+      val retry = graft.sources.MemWriterFactory.forTable("spec_abort", schema)
+        .createWriter(0, 1L)
       retry.write(org.apache.spark.sql.catalyst.InternalRow(2L))
       val msg = retry.commit()
       new graft.sources.MemBatchWrite("spec_abort", truncate = false, schema)

@@ -3,7 +3,6 @@ package graft.sources
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.SparkSpec
-import graft.core.EngineSession
 
 /** CONVERT-ON-WRITE for streaming upserts on file-backed tables (the
   * Iceberg equality→position-delete shape): the epoch commit runs a
@@ -55,7 +54,7 @@ class UpsertConversionSpec extends SparkSpec {
     assert(st.eqDeletes.isEmpty,
       "the epoch's equality delete must convert to DVs — no probe record persists")
     val v1Batches = st.batches.filter(b => b.version == 1L)
-    assert(v1Batches.nonEmpty && v1Batches.forall(_.store.file.isDefined))
+    assert(v1Batches.nonEmpty && v1Batches.forall(_.store.path.endsWith(".parquet")))
     val killed = v1Batches.flatMap(_.dv.toSeq)
     assert(killed.nonEmpty && killed.forall(_._2 == 2L),
       s"doomed positions carry the epoch's version, got ${killed.take(5)}")
@@ -117,20 +116,5 @@ class UpsertConversionSpec extends SparkSpec {
     assert(spark.sql(
       "SELECT CAST(sum(v) AS BIGINT) FROM graft.upconv_sh VERSION AS OF 1")
       .head().getLong(0) === (0L until 40L).map(_ * 10).sum)
-  }
-
-  test("driver-resident upsert tables keep the read-time equality delete") {
-    catalogOn()
-    spark.sql("DROP TABLE IF EXISTS graft.upconv_mem")
-    EngineSession.driverResident(spark) {
-      spark.sql("CREATE TABLE graft.upconv_mem (k BIGINT, v BIGINT) TBLPROPERTIES (" +
-        "'graft.delete-mode'='merge-on-read', 'graft.upsert-keys'='k')")
-    }
-    runEpochs("graft.upconv_mem")
-    val st = MemTables.get("upconv_mem").get
-    assert(st.storageDir.isEmpty)
-    assert(st.eqDeletes.nonEmpty, "no file plane, no conversion job — the " +
-      "read-time record remains")
-    assert(spark.sql("SELECT count(*) FROM graft.upconv_mem").head().getLong(0) === 40L)
   }
 }

@@ -12,7 +12,11 @@ side. For `op_p50_s` it prints the win count and the verdict under the rule:
 a gain needs wins in at least nine tenths of the pairs (ties count for
 neither side), medians that differ by more than the distance between the
 parent's quartiles, and no more failed operations than at the parent. Every
-other metric is checked against the bound `BENCHMARK.json` fixes for it.
+end-to-end metric that is not a gain, `op_p50_s` included, is checked against
+the bound `BENCHMARK.json` fixes for it: it is a REGRESSION when its median
+is worse by more than the bound, and
+UNRESOLVED when the parent's own spread (quartile distance over median) is
+wider than the bound, unless every change run beats every parent run.
 
 The parent checkout is a `git worktree` of `HEAD` under `target/ab/`, made
 on first use and reused after; it has its own `target/`, so the two sides
@@ -110,6 +114,7 @@ def main():
         (pq1, pq3), (cq1, cq3) = quartiles(par), quartiles(chg)
         line = "  %-22s median %.4g/%.4g  quartiles %.4g-%.4g / %.4g-%.4g" % (n, mp, mc, pq1, pq3, cq1, cq3)
         lower = spec.get(n, {}).get("better", "lower") == "lower"
+        gain = False
         if n == CLAIM:
             wins = sum(1 for x, y in zip(par, chg) if (y < x if lower else y > x))
             losses = sum(1 for x, y in zip(par, chg) if (y > x if lower else y < x))
@@ -117,10 +122,15 @@ def main():
                     and failed["change"] <= failed["parent"])
             line += "  wins %d, losses %d, ties %d of %d: %s" % (
                 wins, losses, len(pairs) - wins - losses, len(pairs), "GAIN" if gain else "no gain")
-        elif n in spec:
+        if n in spec and not gain:
+            bound = spec[n]["bound"]
             worse = ((mc - mp) if lower else (mp - mc)) / mp if mp else 0.0
-            line += "  worse by %+.1f%% (bound %.0f%%)%s" % (
-                100 * worse, 100 * spec[n]["bound"], "  REGRESSION" if worse > spec[n]["bound"] else "")
+            spread = (pq3 - pq1) / mp if mp else 0.0
+            dominates = max(chg) < min(par) if lower else min(chg) > max(par)
+            verdict = ("  UNRESOLVED (parent spread %.1f%%)" % (100 * spread)
+                       if spread > bound and not dominates
+                       else "  REGRESSION" if worse > bound else "")
+            line += "  worse by %+.1f%% (bound %.0f%%)%s" % (100 * worse, 100 * bound, verdict)
         print(line)
 
 
