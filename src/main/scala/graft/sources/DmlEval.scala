@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
 /** Row-level DML evaluation shipped WHERE THE ROWS ARE — the executor
   * half of `DELETE FROM ... WHERE` and filtered OVERWRITE on FILE-BACKED
   * tables. The driver resolves everything metadata-shaped per candidate
-  * batch (filter-column era/tombstone binding, ADD COLUMN defaults,
-  * applicable equality-delete keys, the copy-on-write target directory)
-  * into one serializable [[DistributedDml.EvalTask]]; a one-file-per-task
-  * Spark job then streams each parquet file ONCE to find matches and — on
+  * batch (filter-column era/tombstone binding, ADD COLUMN defaults, the
+  * copy-on-write target directory) into one serializable
+  * [[DistributedDml.EvalTask]]; a one-file-per-task Spark job then
+  * streams each parquet file ONCE to find matches and — on
   * copy-on-write tables — a second time to write the survivor file, stats
   * and sortedness accumulating in the task exactly like an ordinary write
   * task. The driver gets back matched positions + a survivor manifest,
@@ -21,10 +21,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the candidate batches ACROSS THE CLUSTER instead of pulling the table
   * through the driver (the round-13 standing scale wart).
   *
-  * Semantics are identical to the driver-side evaluator they replace
-  * (SQL three-valued logic over era-resolved values; survivors preserve
-  * file order, so sorted-layout claims survive) — [[RowPredicate]] IS the
-  * shared implementation, used by both paths.
+  * Semantics: SQL three-valued logic over era-resolved values
+  * ([[RowPredicate]]); survivors preserve file order, so sorted-layout
+  * claims survive.
   */
 /** Serializable per-batch row-level filter conjunction under SQL
   * THREE-VALUED logic: a row matches only when the conjunction is
@@ -130,11 +129,11 @@ final class RowPredicate(
     filters.forall(f => eval(f, r).contains(true))
 }
 
-/** One equality-delete's membership probe against one batch, key columns
-  * already era-resolved to field indexes on the driver: a row is killed
-  * when its canonicalized key tuple is in the delete's key set (a NULL or
-  * unresolvable key never matches — the same rule
-  * [[MemTables.effectiveKills]] applies driver-side).
+/** One upsert epoch's key-membership probe against one batch, key
+  * columns already era-resolved to field indexes on the driver: a row is
+  * killed when its canonicalized key tuple is in the epoch's key set (a
+  * NULL key never matches, and the driver plans no probe for a batch
+  * whose key column does not resolve).
   */
 final case class EqProbe(
     keyIdx: Array[Int], keyTypes: Array[DataType],
@@ -158,21 +157,18 @@ final case class SurvivorFile(
 
 object DistributedDml {
 
-  /** One batch's already-dead row state — delete-vector positions +
-    * equality-delete probes (dead rows never match, mirroring the driver
-    * evaluator). Shipped ONCE PER EXECUTOR via `sc.broadcast`, never in
-    * the task closure: at a million dead positions × many candidate
-    * files, per-task serialization would re-ship the same payload for
-    * every file. Probe key indexes resolve into the task's PRUNED match
-    * schema.
+  /** One batch's already-dead row state — its delete-vector positions
+    * (dead rows never match). Shipped ONCE PER EXECUTOR via
+    * `sc.broadcast`, never in the task closure: at a million dead
+    * positions × many candidate files, per-task serialization would
+    * re-ship the same payload for every file.
     */
-  final case class KillState(dvDead: Array[Byte], probes: Seq[EqProbe])
-      extends Serializable {
+  final case class KillState(dvDead: Array[Byte]) extends Serializable {
     /** Hot-loop membership over the decoded bitmap (built once per task). */
     def deadFn: Int => Boolean = PosBitmap.membership(dvDead)
   }
 
-  val EmptyKills: KillState = KillState(Array.empty, Nil)
+  val EmptyKills: KillState = KillState(Array.empty)
 
   /** Everything one executor task needs to evaluate one file-backed batch:
     * where the rows live, the bound predicate, and — copy-on-write only —
@@ -182,11 +178,11 @@ object DistributedDml {
     * `remove_orphan_files`'s department).
     *
     * `matchSchema` is the PRUNED read schema of the match pass — only the
-    * predicate-referenced + equality-key columns (in file field order):
-    * on a wide table the match pass's parquet IO is the predicate
-    * footprint, not the table width. `pred` and the broadcast probes bind
-    * their field indexes into `matchSchema`; the CoW survivor pass reads
-    * the full `schema` (it materializes every column anyway).
+    * predicate-referenced columns (in file field order): on a wide table
+    * the match pass's parquet IO is the predicate footprint, not the
+    * table width. `pred` binds its field indexes into `matchSchema`; the
+    * CoW survivor pass reads the full `schema` (it writes every column
+    * anyway).
     */
   final case class EvalTask(
       batchId: Long, path: String, schema: StructType,
@@ -360,8 +356,7 @@ object DistributedDml {
       while (it.hasNext) {
         val r = it.next()
         val pos = it.pos.toInt
-        val dead = dvDead(pos) || kills.probes.exists(_.kills(r))
-        if (!dead && t.pred.matches(r)) matched += pos
+        if (!dvDead(pos) && t.pred.matches(r)) matched += pos
       }
     } finally it.close()
     if (matched.isEmpty)
@@ -383,9 +378,9 @@ object DistributedDml {
             var pos = 0
             while (it2.hasNext) {
               val r = it2.next()
-              // survivors = everything but THIS delete's matches (dead
-              // rows stay physically present exactly as the driver
-              // rewrite keeps them; their kills remain recorded)
+              // survivors = everything but THIS delete's matches
+              // (already-dead rows stay physically present; their kills
+              // remain recorded)
               if (!matchedSet.contains(pos)) {
                 w.write(r); acc.add(r); tracker.add(r); kept += 1
               }

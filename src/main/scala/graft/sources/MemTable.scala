@@ -80,9 +80,8 @@ object MemTables {
     * manifest entry (path + count; bounds/tuple live on [[TaggedBatch]]),
     * scans ship the PATH and executors stream the rows, so neither publish
     * nor read ever materializes data driver-side. `rows` loads the file —
-    * only content-inspecting maintenance paths use it (equality-delete
-    * probes, sessionless DELETE row evaluation, `compact_table`'s fold),
-    * each documented gate-scale at its call site.
+    * only rollback's delete-vector subset copy uses it, gate-scale by
+    * contract (see [[MemTables.rollback]]).
     */
   final case class FileStore(path: String, count: Int, schema: StructType,
       sorted: Boolean = false) {
@@ -367,19 +366,8 @@ object MemTables {
     def allNull: Boolean = nullCount == rowCount
   }
 
-  /** One EQUALITY-DELETE file (Iceberg's key-based delete variant — what
-    * streaming CDC upsert ingest writes when row positions are unknowable
-    * at write time): at `version`, every row of any OLDER batch whose key
-    * tuple is in `keys` is dead. The strictly-older rule (Iceberg's
-    * sequence-number rule) means the same commit's inserts are never
-    * self-deleted — which is exactly what makes an upsert epoch
-    * (delete-by-key + insert) one atomic version. Key values are stored
-    * canonicalized ([[canonKey]]) so probes compare across type widening.
-    */
-  final case class EqDelete(version: Long, keyCols: Seq[String], keys: Set[Seq[Any]])
-
-  /** Canonical form of one internal key value, so equality-delete probes
-    * survive type widening (int batch, bigint delete) and internal string
+  /** Canonical form of one internal key value, so upsert key probes
+    * survive type widening (int batch, bigint epoch) and internal string
     * representation: integrals → Long, floats → Double, UTF8String →
     * String. Floating zeros normalize −0.0 → 0.0: Spark SQL equality (and
     * its own UnsafeRow normalization) treats the two as EQUAL, so a key —
@@ -397,50 +385,6 @@ object MemTables {
     case d: java.lang.Double if d.doubleValue == 0.0 => java.lang.Double.valueOf(0.0)
     case u: org.apache.spark.unsafe.types.UTF8String => u.toString
     case other => other
-  }
-
-  /** The EFFECTIVE kill map of one batch — positional DV entries merged
-    * with equality-delete matches (earliest kill version wins): position →
-    * version the row died at. Equality deletes apply only to batches
-    * strictly OLDER than themselves and at-or-before the batch's removal;
-    * key columns resolve through the same era/tombstone rules as scans (an
-    * unresolvable or NULL key never matches). Read paths filter the result
-    * by their bound snapshot; the change feed emits one row-level delete
-    * event per entry at its version. At 100 TB this probe is the reader-
-    * side anti-join every MoR table format pays on equality deletes,
-    * amortized here at planning.
-    */
-  def effectiveKills(
-      b: TaggedBatch, eqDeletes: Vector[EqDelete],
-      eras: Map[String, Vector[(Long, String)]],
-      droppedAt: Map[String, Long]): Map[Int, Long] = {
-    val applicable = eqDeletes
-      .filter(e => e.version > b.version && e.version <= b.removedAt)
-    if (applicable.isEmpty) b.dv
-    else {
-      val kills = scala.collection.mutable.Map.from(b.dv)
-      applicable.sortBy(_.version).foreach { e =>
-        val idx = e.keyCols.map(c =>
-          sourceFieldName(eras, droppedAt)(c, b.writeVersion)
-            .map(n => b.schema.fieldNames.indexOf(n)).filter(_ >= 0).getOrElse(-1))
-        if (!idx.contains(-1)) {
-          val types = idx.map(b.schema.fields(_).dataType)
-          var p = 0
-          while (p < b.rowCount) {
-            if (!kills.contains(p) || kills(p) > e.version) {
-              val r = b.rows(p)
-              val tuple = idx.indices.map { j =>
-                if (r.isNullAt(idx(j))) null else canonKey(r.get(idx(j), types(j)))
-              }
-              if (!tuple.contains(null) && e.keys.contains(tuple))
-                kills(p) = math.min(kills.getOrElse(p, Long.MaxValue), e.version)
-            }
-            p += 1
-          }
-        }
-      }
-      kills.toMap
-    }
   }
 
   /** Internal-value comparator per supported stats type; None = the type
@@ -943,15 +887,12 @@ object MemTables {
     // refuses to age out a tagged version (drop the tag first), so a
     // release tag is a durable replay handle, not a dangling pointer.
     @volatile var tags: Map[String, Long] = Map.empty
-    // EQUALITY DELETES ([[EqDelete]]), appended by streaming upsert
-    // epochs; applied at read against strictly-older batches
-    @volatile var eqDeletes: Vector[EqDelete] = Vector.empty
     // TABLE SORT ORDER: set by a sorted `rewrite_data_files` (each live
     // batch is then internally sorted by these columns, ascending,
     // nulls first — Spark's sortWithinPartitions default), with the
     // version the claim holds FROM (snapshot reads before it are
     // unsorted). Cleared by any mutation that adds or reorders rows;
-    // kill-only mutations (DV/equality deletes) preserve relative order
+    // kill-only mutations (delete-vector entries) preserve relative order
     // and keep it. The scan reports it ([[MemScan.outputOrdering]]) so
     // downstream merge joins skip their sorts.
     @volatile var sortedBy: Seq[String] = Nil
@@ -1079,49 +1020,15 @@ object MemTables {
 
   private val tables = TrieMap.empty[String, State]
 
-  /** Bounded pool for DRIVER-SIDE content maintenance over file-backed
-    * batches (DELETE evaluation, CoW survivor rewrites): the per-batch
-    * work is pure and independent, and each file open carries a fixed
-    * cost — serial walks turn a 32-file table into 32 sequential opens
-    * under the table monitor. Parallelism here is wall-time only; the
-    * monitor still serializes the MUTATION.
-    */
-  private lazy val contentPool: java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(8,
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-content-io")
-        t.setDaemon(true)
-        t
-      })
-
-  /** Map `f` over `items` on [[contentPool]], preserving order. Worker
-    * exceptions rethrow UNWRAPPED — callers' loud-failure contracts
-    * (e.g. UnsupportedOperationException on an untranslatable DELETE
-    * filter) must not change shape because the walk parallelized.
-    */
-  private def parMap[A, B](items: Seq[A])(f: A => B): Seq[B] = {
-    if (items.size <= 1) return items.map(f)
-    val futures = items.map(a =>
-      contentPool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = f(a)
-      }))
-    futures.map { fut =>
-      try fut.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          throw Option(e.getCause).getOrElse(e)
-      }
-    }
-  }
-
   /** Register a new table; false if the key is already taken (the catalog
     * maps that to Spark's TableAlreadyExistsException so that
     * `CREATE TABLE IF NOT EXISTS` is a no-op, not a crash).
     */
   /** Name of the table property selecting streaming UPSERT ingest: a
     * comma-separated key-column list (the Iceberg identifier-fields /
-    * Flink upsert shape). Each streaming epoch then publishes one
-    * equality-delete over its rows' keys plus the inserts, atomically.
+    * Flink upsert shape). Each streaming epoch then kills the older rows
+    * that share its rows' keys (delete-vector entries) and appends the
+    * inserts, atomically ([[commitEpochUpsert]]).
     */
   val UpsertKeysProp = "graft.upsert-keys"
 
@@ -1434,7 +1341,9 @@ object MemTables {
     * the last publish left it. Newest directory wins when stale dirs
     * from dead processes share the key prefix; unreadable or
     * foreign-format metadata is skipped with a stderr note (a janitor
-    * concern, never a read failure for the live table).
+    * concern, never a read failure for the live table). A document that
+    * still carries legacy equality deletes fails the read instead
+    * ([[TableMetadata.LegacyMetadataException]]).
     */
   // directory -> (metadata.json mtime, table key) — identity probes are
   // the common path (every DROP IF EXISTS of an absent table scans), so
@@ -1483,6 +1392,7 @@ object MemTables {
       .flatMap { d =>
         try TableMetadata.load(d.getAbsolutePath)
         catch {
+          case e: TableMetadata.LegacyMetadataException => throw e
           case e: Exception =>
             System.err.println(
               s"graft: skipping unreadable table metadata at $d: ${e.getMessage}")
@@ -1590,8 +1500,8 @@ object MemTables {
 
   /** One contribution to a publish:
     *
-    *  - [[RowsPayload]] — rows the DRIVER holds (maintenance folds, delta
-    *    post-images, direct commits); [[mkBatches]] writes them to a file;
+    *  - [[RowsPayload]] — rows the DRIVER holds (delta post-images and
+    *    inserts, direct commits); [[mkBatches]] writes them to a file;
     *  - [[FilesPayload]] — manifests of executor-written parquet files:
     *    the split, the stats pass, and the bytes all happened IN THE
     *    TASK; the driver commits paths.
@@ -1643,9 +1553,9 @@ object MemTables {
   }
 
   /** The store one DRIVER-materialized row group publishes under: the
-    * driver writes the file — these are the maintenance paths whose rows
-    * materialize driver-side anyway (compaction folds, sessionless CoW
-    * delete survivors, rollback subsets, delta post-images).
+    * driver writes the file — these are the paths whose rows materialize
+    * driver-side anyway (rollback subsets, delta post-images and inserts,
+    * branch-staged DML).
     */
   private def storeFor(
       st: State, schema: StructType, rows: Array[InternalRow]): FileStore = {
@@ -1767,7 +1677,7 @@ object MemTables {
       throw new IllegalStateException(s"mem table $key dropped mid-alter"))
     st.synchronized {
       // upsert key columns are the table's identity: dropping or renaming
-      // one would silently re-key every future epoch's equality deletes
+      // one would silently re-key every future epoch's key-based kills
       st.createProps.get(UpsertKeysProp).foreach { ks =>
         val keys = ks.split(',').map(_.trim).toSet
         val touched = keys.intersect(
@@ -2228,15 +2138,6 @@ object MemTables {
       st.updatedAt = st.updatedAt.filter(_._1 >= st.versionTimes.head._1)
       val liveIds = st.batches.iterator.map(_.batchId).toSet
       st.updatePostBatches = st.updatePostBatches.filter(liveIds.contains)
-      // equality deletes whose window covers NO retained batch (main or
-      // branch stage) can never kill a row again — prune them, or a
-      // long-running upsert stream's ledger (one key set per epoch) grows
-      // for its whole lifetime, re-serialized into metadata.json on every
-      // commit and re-filtered per batch at every scan planning
-      val branchBatches = st.branches.valuesIterator.flatMap(_.batches).toVector
-      st.eqDeletes = st.eqDeletes.filter(e =>
-        (kept.iterator ++ branchBatches.iterator).exists(b =>
-          e.version > b.version && e.version <= b.removedAt))
       persistMeta(st)
       (gone.size.toLong, st.earliestVersion)
     }
@@ -2297,11 +2198,8 @@ object MemTables {
       def visibleAtTarget(b: TaggedBatch): Boolean =
         b.version <= toVersion && toVersion < b.removedAt
       def liveNow(b: TaggedBatch): Boolean = b.removedAt == Long.MaxValue
-      def killsOf(b: TaggedBatch): Map[Int, Long] =
-        effectiveKills(b, st.eqDeletes, st.eras, st.droppedAt)
-      // row kills (DV entries OR equality-delete matches) recorded after
-      // the target are deletes the rollback undoes
-      def dvDrifted(b: TaggedBatch): Boolean = killsOf(b).exists(_._2 > toVersion)
+      // DV entries recorded after the target are deletes the rollback undoes
+      def dvDrifted(b: TaggedBatch): Boolean = b.dv.exists(_._2 > toVersion)
       val toRemove = st.batches.filter(b => liveNow(b) &&
         (!visibleAtTarget(b) || dvDrifted(b)))
       val toRestore = st.batches.filter(b => visibleAtTarget(b) &&
@@ -2311,8 +2209,7 @@ object MemTables {
         st.version = v
         val removeIds = toRemove.map(_.batchId).toSet
         val restored = toRestore.flatMap { b =>
-          val deadAtTarget =
-            killsOf(b).collect { case (p, at) if at <= toVersion => p }.toSet
+          val deadAtTarget = b.deadAt(toVersion)
           val subset = deadAtTarget.nonEmpty
           val rows = if (!subset) b.rows
             else b.rows.indices.filterNot(deadAtTarget).map(b.rows).toArray
@@ -2351,11 +2248,10 @@ object MemTables {
     * Iceberg serializable/snapshot-isolation split): `expectedVersion` is
     * the table version the operation's scan planned against. An
     * interleaved commit is a CONFLICT only when it touched what this
-    * rewrite actually SCANNED — a scanned batch soft-removed, a scanned
-    * batch that gained delete-vector kills, or an equality delete landing
-    * after the scan (its key kills could overlap scanned rows). A
-    * disjoint append — the overwhelmingly common race on a busy 100 TB
-    * table — commits concurrently: the rewrite replaces exactly the
+    * rewrite actually SCANNED — a scanned batch soft-removed or a scanned
+    * batch that gained delete-vector kills. A disjoint append — the
+    * overwhelmingly common race on a busy 100 TB table — commits
+    * concurrently: the rewrite replaces exactly the
     * batches it read, and the appended batches survive untouched (the
     * replacement set is bounded to batches visible AT the scanned
     * version, so a whole-table rewrite can never erase rows it never
@@ -2384,8 +2280,6 @@ object MemTables {
             (b.removedAt != Long.MaxValue || b.dv.exists(_._2 > v)))
           if (touched.nonEmpty)
             conflict(s"modified scanned batch(es) ${touched.map(_.batchId).mkString(", ")}")
-          if (st.eqDeletes.exists(_.version > v))
-            conflict("published equality deletes")
         }
       }
       st.version += 1
@@ -2463,14 +2357,12 @@ object MemTables {
     * is the shape that makes sparse 100 TB UPDATEs affordable (the
     * copy-on-write path still rewrites whole matched batches and pays
     * read-time nothing; this path writes the delta and pays the DV filter
-    * at read). Same optimistic-concurrency rule as [[replaceBatches]].
-    * Fails loudly on a row id that resolves to no live batch or to an
-    * already-deleted position — either would mean the scan and publish
-    * disagree about the table state.
+    * at read). Fails loudly on a row id that resolves to no live batch or
+    * to an already-deleted position — either would mean the scan and
+    * publish disagree about the table state.
     */
   def applyDelta(
       key: String,
-      expectedVersion: Option[Long],
       writeSchema: StructType,
       deletes: Seq[(Long, Int)],
       inserts: Seq[Array[InternalRow]],
@@ -2478,22 +2370,12 @@ object MemTables {
     val st = tables.getOrElse(key,
       throw new IllegalStateException(s"mem table $key dropped mid-delta"))
     st.synchronized {
-      // SNAPSHOT-ISOLATION validation (see [[replaceBatches]]): a version
-      // advance alone is NOT a conflict — a disjoint append commits
-      // concurrently. The delta's own row ids are validated structurally
-      // below (referenced batches must still be live with every targeted
-      // position alive — a CoW rewrite or compaction that replaced them
-      // fails the unknown-batch check, an overlapping DV fails the
-      // already-deleted check). Only an equality delete landing after the
-      // scan conflicts blindly: its key kills could overlap the rows this
-      // delta re-inserts as post-images.
-      expectedVersion.foreach { v =>
-        if (st.version != v && st.eqDeletes.exists(_.version > v))
-          throw new IllegalStateException(
-            s"mem table $key: concurrent commit detected — the delta rewrite " +
-              s"scanned version $v but an interleaved commit published equality " +
-              "deletes; publishing would lose their effect. Re-run the DML.")
-      }
+      // SNAPSHOT-ISOLATION validation is structural: a version advance
+      // alone is NOT a conflict — a disjoint append commits concurrently.
+      // The delta's own row ids are validated below (referenced batches
+      // must still be live with every targeted position alive — a CoW
+      // rewrite or compaction that replaced them fails the unknown-batch
+      // check, an overlapping DV fails the already-deleted check).
       // updates contribute a DV delete (the PRE-image) and a replacement
       // row (the POST-image); the linkage is recorded so the change feed
       // can surface update_preimage/update_postimage instead of the
@@ -2622,19 +2504,37 @@ object MemTables {
     }
   }
 
+  /** The SparkContext that runs a kill-computing job: the upsert epoch's
+    * key extraction and conversion, or the DELETE / filtered-overwrite
+    * match pass. Every engine write runs inside a session; a direct call
+    * on a thread with neither an active nor a default session has nowhere
+    * to run the job, so it fails here, before its caller bumps a version
+    * or records an epoch.
+    */
+  private def jobContext(st: State, op: String): org.apache.spark.SparkContext =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .getOrElse(throw new IllegalStateException(
+        s"mem table ${st.tableKey}: $op runs a Spark job but this thread has " +
+          "no active or default SparkSession"))
+      .sparkContext
+
   /** Streaming UPSERT epoch publish (tables created with
-    * [[UpsertKeysProp]]): one atomic version carrying an EQUALITY DELETE
-    * over the epoch's key set plus the epoch's inserts — the Flink→Iceberg
-    * upsert-ingest shape, where positions of the replaced rows are
-    * unknowable at write time so the delete is key-based and applied at
-    * read ([[effectiveKills]]). The strictly-older rule means the epoch
-    * never deletes its own inserts; duplicate keys WITHIN one epoch are
-    * therefore kept (the industry contract: upsert dedup is per
-    * checkpoint/epoch boundary, in-epoch ordering is the producer's job).
-    * Key tuples containing NULL never match (SQL equality), so null-keyed
-    * rows are plain appends. Idempotent per (queryId, epochId) like
-    * [[commitEpoch]]. Write cost is O(epoch rows) — no old batch is read
-    * or touched at write time.
+    * [[UpsertKeysProp]]): one atomic version that kills every live row of
+    * an OLDER batch sharing a key tuple with the epoch, plus the epoch's
+    * inserts — the Flink→Iceberg upsert-ingest shape. The replaced rows'
+    * positions are unknowable at write time, so the commit CONVERTS the
+    * key-based delete into positional delete-vector entries (the Iceberg
+    * equality→position-delete shape) with Spark jobs that run where the
+    * rows live; no key record persists, and scans, time travel and the
+    * change feed read the kills like any other DV entry. The
+    * strictly-older rule means the epoch never deletes its own inserts;
+    * duplicate keys WITHIN one epoch are therefore kept (the industry
+    * contract: upsert dedup is per checkpoint/epoch boundary, in-epoch
+    * ordering is the producer's job). Key tuples containing NULL never
+    * match (SQL equality), so null-keyed rows are plain appends.
+    * Idempotent per (queryId, epochId) like [[commitEpoch]]. Neither the
+    * epoch's nor the table's rows pass through the driver.
     */
   def commitEpochUpsert(
       key: String,
@@ -2648,130 +2548,100 @@ object MemTables {
     st.synchronized {
       val done = st.committedEpochs.getOrElse(queryId, Set.empty)
       if (!done.contains(epochId)) {
-        // validation (key columns, NOT NULL via mkBatches below) runs
-        // BEFORE the epoch is recorded or the clock bumped — same
-        // failed-publish-forgotten contract as commitEpoch
+        // validation (key columns, NOT NULL via mkBatches below, the job
+        // session) runs BEFORE the epoch is recorded or the clock bumped —
+        // same failed-publish-forgotten contract as commitEpoch
         val idx = keyCols.map(c => writeSchema.fieldNames.indexOf(c))
         if (idx.contains(-1))
           throw new IllegalStateException(
             s"mem table $key: upsert write schema ${writeSchema.fieldNames.mkString(",")} " +
               s"lacks key column(s) ${keyCols.mkString(",")}")
         val types = idx.map(writeSchema.fields(_).dataType)
-        def tupleOf(r: InternalRow): Seq[Any] = idx.indices.map { j =>
-          if (r.isNullAt(idx(j))) null else canonKey(r.get(idx(j), types(j)))
-        }
-        // epoch key extraction: the epoch's files yield their distinct
-        // key tuples in a one-task-per-file job when a session exists —
-        // together with the probe conversion below, an upsert epoch
-        // commit moves ZERO table or epoch content through the driver
-        // (sessionless callers stream driver-side, change-bounded)
-        val keySession = org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
         val epochPaths = batches.flatMap(_.files.map(_.path))
-        // OVERSIZED epochs (a backfill re-ingesting 10⁸ keys) must not
-        // collect their key set driver-ward nor broadcast it to every
-        // executor: above the threshold the conversion joins epoch keys
-        // against candidate-file rows ON THE CLUSTER instead
-        // ([[DistributedDml.probeMatchesShuffled]]) — driver/broadcast
-        // bytes stay flat in epoch size
-        val epochRowEstimate: Long = batches.iterator.map(_.rowTotal).sum
-        val broadcastMaxRows =
-          try org.apache.spark.sql.internal.SQLConf.get.getConfString(
-            "spark.graft.upsert.broadcast-max-rows", "4000000").toLong
-          catch { case _: Exception => 4000000L }
-        val shuffledConvert = keySession.isDefined && epochPaths.nonEmpty &&
-          epochRowEstimate > broadcastMaxRows
-        val keys: Set[Seq[Any]] =
-          if (epochPaths.isEmpty || shuffledConvert) Set.empty
-          else keySession match {
-            case Some(s) =>
-              val schemaB = writeSchema
-              val idxB = idx
-              val typesB = types
-              s.sparkContext.parallelize(epochPaths, epochPaths.size).map { p =>
-                val it = ParquetRows.iterator(p, schemaB)
+        val v = st.version + 1
+        val fresh = batches.flatMap(rs => mkBatches(st, writeSchema, rs, v))
+        val converted: Map[Long, Array[Int]] =
+          if (epochPaths.isEmpty) Map.empty
+          else {
+            val sc = jobContext(st, "upsert epoch commit")
+            // OVERSIZED epochs (a backfill re-ingesting 10⁸ keys) must not
+            // collect their key set driver-ward nor broadcast it to every
+            // executor: above the threshold the conversion joins epoch
+            // keys against candidate-file rows ON THE CLUSTER instead
+            // ([[DistributedDml.probeMatchesShuffled]]) — driver/broadcast
+            // bytes stay flat in epoch size
+            val epochRowEstimate: Long = batches.iterator.map(_.rowTotal).sum
+            val broadcastMaxRows =
+              try org.apache.spark.sql.internal.SQLConf.get.getConfString(
+                "spark.graft.upsert.broadcast-max-rows", "4000000").toLong
+              catch { case _: Exception => 4000000L }
+            val shuffledConvert = epochRowEstimate > broadcastMaxRows
+            // epoch key extraction: the epoch's files yield their distinct
+            // key tuples in a one-task-per-file job
+            val keys: Set[Seq[Any]] =
+              if (shuffledConvert) Set.empty
+              else sc.parallelize(epochPaths, epochPaths.size).map { p =>
+                val it = ParquetRows.iterator(p, writeSchema)
                 val out = Set.newBuilder[Seq[Any]]
                 try it.foreach { r =>
-                  val t: Seq[Any] = idxB.indices.map { j =>
-                    if (r.isNullAt(idxB(j))) null
-                    else canonKey(r.get(idxB(j), typesB(j)))
+                  val t: Seq[Any] = idx.indices.map { j =>
+                    if (r.isNullAt(idx(j))) null
+                    else canonKey(r.get(idx(j), types(j)))
                   }
                   if (!t.contains(null)) out += t
                 } finally it.close()
                 out.result()
               }.collect().iterator.flatten.toSet
-            case None =>
-              epochPaths.iterator
-                .flatMap(p => ParquetRows.iterator(p, writeSchema))
-                .map(tupleOf).filterNot(_.contains(null)).toSet
-          }
-        val v = st.version + 1
-        val fresh = batches.flatMap(rs => mkBatches(st, writeSchema, rs, v))
-        // CONVERT-ON-WRITE (the Iceberg equality→position-delete shape):
-        // the epoch's equality delete becomes POSITIONAL delete-vector
-        // entries at this commit — a
-        // one-task-per-candidate-file probe job (strictly-older alive
-        // batches, bounds/bloom-pruned per key column) finds the doomed
-        // positions where the rows live, and NO probe record persists:
-        // scan planning and the change feed then read the DV plane
-        // instead of re-probing file CONTENTS driver-side on every read
-        // (previously the last table-sized driver content path — every
-        // scan of an eq-delete table paid O(older rows) in the driver).
-        // Semantics are identical: kills land at this version, CDC
-        // surfaces the same row-level deletes, time travel sees the rows
-        // before it. Sessionless callers keep the read-time
-        // equality-delete record.
-        val session = org.apache.spark.sql.SparkSession.getActiveSession
-          .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        val converted: Map[Long, Array[Int]] =
-          if (keys.isEmpty && !shuffledConvert) Map.empty
-          else if (session.isEmpty) {
-            st.eqDeletes = st.eqDeletes :+ EqDelete(v, keyCols, keys)
-            Map.empty
-          } else {
-            import org.apache.spark.sql.sources.{Filter => SFilter, In => SIn}
-            def res(b: TaggedBatch)(c: String): Option[String] =
-              sourceFieldName(st.eras, st.droppedAt)(c, b.writeVersion)
-                .filter(b.schema.fieldNames.contains)
-            // per-column In pruning (a conservative projection of the key
-            // tuple set) over integral/string columns — canonKey's widened
-            // forms are those columns' natural external filter values
-            val pruneFilters: Array[SFilter] =
-              if (shuffledConvert || keys.size > 1024) Array.empty
-              else keyCols.zipWithIndex.flatMap { case (c, j) =>
-                writeSchema.fields(idx(j)).dataType match {
-                  case org.apache.spark.sql.types.LongType |
-                       org.apache.spark.sql.types.IntegerType |
-                       org.apache.spark.sql.types.ShortType |
-                       org.apache.spark.sql.types.ByteType |
-                       org.apache.spark.sql.types.StringType =>
-                    Some(SIn(c, keys.iterator.map(_(j)).toArray.distinct): SFilter)
-                  case _ => None
+            if (keys.isEmpty && !shuffledConvert) Map.empty
+            else {
+              import org.apache.spark.sql.sources.{Filter => SFilter, In => SIn}
+              def res(b: TaggedBatch)(c: String): Option[String] =
+                sourceFieldName(st.eras, st.droppedAt)(c, b.writeVersion)
+                  .filter(b.schema.fieldNames.contains)
+              // per-column In pruning (a conservative projection of the
+              // key tuple set) over integral/string columns — canonKey's
+              // widened forms are those columns' natural external filter
+              // values
+              val pruneFilters: Array[SFilter] =
+                if (shuffledConvert || keys.size > 1024) Array.empty
+                else keyCols.zipWithIndex.flatMap { case (c, j) =>
+                  writeSchema.fields(idx(j)).dataType match {
+                    case org.apache.spark.sql.types.LongType |
+                         org.apache.spark.sql.types.IntegerType |
+                         org.apache.spark.sql.types.ShortType |
+                         org.apache.spark.sql.types.ByteType |
+                         org.apache.spark.sql.types.StringType =>
+                      Some(SIn(c, keys.iterator.map(_(j)).toArray.distinct): SFilter)
+                    case _ => None
+                  }
+                }.toArray
+              // one probe task per strictly-older live candidate file
+              // (bounds/bloom-pruned per key column), pruned to its
+              // era-resolved key columns
+              val older = candidateBatches(pruneFilters, st.specHistory, st.eras,
+                st.droppedAt,
+                st.batches.filter(b => b.removedAt == Long.MaxValue && b.version < v),
+                st.columnDefaults)
+                .flatMap { b =>
+                  val names = keyCols.map(res(b))
+                  // an unresolvable key column means no row of this batch
+                  // can match
+                  if (names.exists(_.isEmpty)) None
+                  else Some(b -> names.map(_.get))
                 }
-              }.toArray
-            val older = candidateBatches(pruneFilters, st.specHistory, st.eras,
-              st.droppedAt,
-              st.batches.filter(b => b.removedAt == Long.MaxValue && b.version < v),
-              st.columnDefaults)
-              .flatMap { b =>
-                val names = keyCols.map(res(b))
-                // an unresolvable key column means no row of this batch
-                // can match (effectiveKills' rule)
-                if (names.exists(_.isEmpty)) None
-                else Some(b -> names.map(_.get))
+              val tasks = older.map { case (b, names) =>
+                val fields = b.schema.fields.filter(f => names.contains(f.name))
+                val matchSchema = StructType(fields)
+                val ki = names.map(n => matchSchema.fieldNames.indexOf(n)).toArray
+                DistributedDml.ProbeTask(b.batchId, b.store.path, matchSchema,
+                  ki, ki.map(matchSchema.fields(_).dataType),
+                  if (b.dv.isEmpty) null else PosBitmap.toBytes(b.dv.keysIterator))
               }
-            val tasks = older.map { case (b, names) =>
-              val fields = b.schema.fields.filter(f => names.contains(f.name))
-              val matchSchema = StructType(fields)
-              val ki = names.map(n => matchSchema.fieldNames.indexOf(n)).toArray
-              DistributedDml.ProbeTask(b.batchId, b.store.path, matchSchema,
-                ki, ki.map(matchSchema.fields(_).dataType),
-                if (b.dv.isEmpty) null else PosBitmap.toBytes(b.dv.keysIterator))
+              if (shuffledConvert)
+                DistributedDml.probeMatchesShuffled(sc, tasks, epochPaths,
+                  writeSchema, idx.toArray, types.toArray)
+              else DistributedDml.probeMatches(sc, tasks, keys)
             }
-            if (shuffledConvert)
-              DistributedDml.probeMatchesShuffled(session.get.sparkContext,
-                tasks, epochPaths, writeSchema, idx.toArray, types.toArray)
-            else DistributedDml.probeMatches(session.get.sparkContext, tasks, keys)
           }
         st.committedEpochs = st.committedEpochs.updated(queryId, done + epochId)
         st.version = v
@@ -2785,8 +2655,8 @@ object MemTables {
             }
           }
         st.batches = st.batches ++ fresh
-        // the epoch's equality delete is kill-only (keeps order); claim
-        // survival rides the same verified-sorted-inserts rule as appends
+        // the epoch's kills keep row order; claim survival rides the same
+        // verified-sorted-inserts rule as appends
         maintainSortClaim(st, fresh, truncate = false)
         st.stamp("stream-upsert")
       }
@@ -2868,18 +2738,6 @@ object MemTables {
     case _ => None
   }
 
-  /** Row-level DELETE as a versioned GROUP REWRITE — the copy-on-write
-    * shape every table format without deletion vectors uses: each batch
-    * containing matches is soft-removed at the delete's version and its
-    * SURVIVORS re-committed as a new batch visible from that version
-    * (`writeVersion` preserved — the bytes' schema era doesn't change).
-    * Untouched batches are left alone, so delete cost is proportional to
-    * the batches containing matches, not the table. Time travel before the
-    * delete still sees every row; the change feed reports the rewrite as
-    * remove-batch + re-insert-survivors (the honest file-level log a
-    * group-based rewrite produces — row-level delete events would require
-    * diffing, which is the CDC consumer's fold).
-    */
   /** Batches a filter set could possibly touch, by the SAME bounds +
     * bucket evaluation the scan's data skipping uses (era/tombstone
     * resolution included): a batch failing any filter's `mayMatch`
@@ -2910,49 +2768,22 @@ object MemTables {
         (bSpec.isEmpty || filters.forall(f => partMayMatch(f, bSpec, b.part)))
     }
 
-  /** Build one batch's serializable [[RowPredicate]]: filter columns
-    * resolved through the SAME era/tombstone/default rules scans project
-    * (driver-side, metadata only). Construction VALIDATES the filter
-    * shapes, so an unsupported condition throws loudly on the driver
-    * before any job launches or state mutates.
-    */
-  private def predicateFor(
-      st: State, b: TaggedBatch, filters: Array[Filter]): RowPredicate = {
-    val cols = filters.flatMap(_.references).distinct
-    val idx = cols.map { c =>
-      c -> sourceFieldName(st.eras, st.droppedAt)(c, b.writeVersion)
-        .map(n => b.schema.fieldNames.indexOf(n)).filter(_ >= 0).getOrElse(-1)
-    }.toMap
-    val dflt = cols.filter(idx(_) < 0).map { c =>
-      c -> defaultFor(st.columnDefaults)(c, b.writeVersion).orNull
-    }.toMap
-    new RowPredicate(filters, idx, dflt, b.schema)
-  }
-
   /** One file-backed batch's PRUNED match-pass plan: the read schema
-    * restricted to the predicate footprint + applicable equality-delete
-    * key columns (file field order preserved), with the predicate and
-    * probes RE-BOUND to field indexes within it — at 100 TB the match
-    * pass's parquet IO is the predicate footprint, not the table width
-    * (the CoW survivor pass still reads every column; it materializes
-    * them anyway). Probe applicability is [[effectiveKills]]'s window:
-    * strictly newer than the batch, at-or-before its removal; an
-    * unresolvable key column never matches.
+    * restricted to the predicate footprint (file field order preserved),
+    * with the predicate RE-BOUND to field indexes within it — at 100 TB
+    * the match pass's parquet IO is the predicate footprint, not the
+    * table width (the CoW survivor pass still reads every column; it
+    * writes them anyway). Building the [[RowPredicate]] VALIDATES the
+    * filter shapes, so an unsupported condition throws loudly on the
+    * driver before any job launches or state mutates.
     */
   private def matchPlanFor(st: State, b: TaggedBatch, filters: Array[Filter])
-      : (StructType, RowPredicate, Seq[EqProbe], Array[Filter]) = {
+      : (StructType, RowPredicate, Array[Filter]) = {
     def res(c: String): Option[String] =
       sourceFieldName(st.eras, st.droppedAt)(c, b.writeVersion)
         .filter(n => b.schema.fieldNames.contains(n))
     val predCols = filters.flatMap(_.references).distinct
-    val probeDefs = st.eqDeletes
-      .filter(e => e.version > b.version && e.version <= b.removedAt)
-      .flatMap { e =>
-        val names = e.keyCols.map(res)
-        if (names.exists(_.isEmpty)) None
-        else Some((e.keys, names.map(_.get)))
-      }
-    val needed = (predCols.flatMap(res) ++ probeDefs.flatMap(_._2)).toSet
+    val needed = predCols.flatMap(res).toSet
     val fields = b.schema.fields.filter(f => needed.contains(f.name))
     // parquet cannot project an empty group — a reference-free filter
     // (AlwaysTrue overwrite) keeps one column just to drive positions
@@ -2966,108 +2797,70 @@ object MemTables {
     val dflt = predCols.filter(idx(_) < 0).map { c =>
       c -> defaultFor(st.columnDefaults)(c, b.writeVersion).orNull
     }.toMap
-    val probes = probeDefs.map { case (keys, names) =>
-      val ki = names.map(n => matchSchema.fieldNames.indexOf(n)).toArray
-      EqProbe(ki, ki.map(matchSchema.fields(_).dataType), keys)
-    }
     // parquet-pushable form of the predicate: references renamed to the
     // FILE's field names; filters touching unresolvable (default-read)
     // columns drop whole (Spark's translator then validates every value
     // against the file's own types, overflow-guarded)
     val rnMap = predCols.iterator.flatMap(c => res(c).map(c -> _)).toMap
     val pushable = filters.flatMap(MemScan.renameFilter(_, rnMap))
-    (matchSchema, new RowPredicate(filters, idx, dflt, matchSchema), probes,
-      pushable)
+    (matchSchema, new RowPredicate(filters, idx, dflt, matchSchema), pushable)
   }
 
   /** Row-level filter matches over the LIVE batches (SQL three-valued
     * evaluation, era/tombstone-resolved, bounds/bucket-pruned) — the
-    * matching half shared by DELETE and filtered OVERWRITE. Throws on
-    * unsupported filter shapes BEFORE any state mutates. Caller holds the
-    * table monitor.
+    * matching half shared by DELETE and filtered OVERWRITE. Caller holds
+    * the table monitor.
     *
     * Candidates evaluate in a one-task-per-file Spark job
     * ([[DistributedDml]]) that also writes copy-on-write survivor files
     * executor-side — table content never transits the driver (the 100 TB
-    * DELETE shape; at gate scale the job doubles as the protocol drill).
-    * A caller without an active session evaluates in-process. Returns the
-    * matched positions per batch plus the pre-built survivor stores for
-    * job-evaluated batches (consumed by [[applyRowKillsLocked]] so the
-    * CoW rewrite skips its driver materialization for exactly those
-    * batches).
+    * DELETE shape). Unsupported filter shapes and a missing session
+    * ([[jobContext]]) throw BEFORE any state mutates; no candidate means
+    * no job and no session needed. Returns the results of the batches
+    * with at least one match, keyed by batch id.
     */
   private def matchedRowsLocked(
-      st: State, filters: Array[Filter])
-      : (Map[Long, Array[Int]],
-         Map[Long, Option[(FileStore, Map[String, ColStats])]]) = {
+      st: State, filters: Array[Filter], op: String)
+      : Map[Long, DistributedDml.EvalResult] = {
     val live = st.batches.filter(_.removedAt == Long.MaxValue)
     val candidates = candidateBatches(filters, st.specHistory, st.eras,
       st.droppedAt, live, st.columnDefaults)
-    // predicate construction validates filter shapes driver-side for
-    // EVERY candidate before any evaluation starts
-    val preds = candidates.map(b => b.batchId -> predicateFor(st, b, filters)).toMap
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    val jobResults: Map[Long, DistributedDml.EvalResult] =
-      if (candidates.isEmpty || session.isEmpty) Map.empty
-      else {
-        // CoW tasks write survivors next to the table's data files; MoR
-        // needs positions only (the kill lands in the delete vector)
-        val survivorDir =
-          if (st.deleteMode == DeleteModeMor) None else Some(st.storageDir)
-        val plans = candidates.map(b => b -> matchPlanFor(st, b, filters))
-        val tasks = plans.map { case (b, (matchSchema, pred, _, pushable)) =>
-          DistributedDml.EvalTask(b.batchId, b.store.path, b.schema,
-            matchSchema = matchSchema, pred = pred,
-            survivorDir = survivorDir,
-            declaredSort = st.declaredSortOrder, bloomCols = st.bloomCols.toSet,
-            pushFilters = pushable)
-        }
-        // kill state (DV positions + eq-delete key sets) rides ONE
-        // broadcast keyed by batch — never the per-task closure
-        val kills = plans.collect {
-          case (b, (_, _, probes, _)) if b.dv.nonEmpty || probes.nonEmpty =>
-            // dead positions ride as a COMPRESSED bitmap: a run-shaped
-            // million-row DV is kilobytes in the broadcast, not a 30 MB
-            // boxed Set[Int]
-            b.batchId -> DistributedDml.KillState(
-              PosBitmap.toBytes(b.dv.keysIterator), probes)
-        }.toMap
-        DistributedDml.run(session.get.sparkContext, tasks, kills)
-      }
-    // driver-side evaluation when no session exists to host the job
-    // (non-Spark callers)
-    val local = if (session.isEmpty) candidates else Vector.empty
-    val localDead = parMap(local) { b =>
-      val dead = effectiveKills(b, st.eqDeletes, st.eras, st.droppedAt)
-      val pred = preds(b.batchId)
-      b.batchId -> b.rows.zipWithIndex.collect {
-        case (r, i) if !dead.contains(i) && pred.matches(r) => i
-      }
-    }.filter(_._2.nonEmpty).toMap
-    val jobDead = jobResults.collect {
-      case (id, r) if r.anyMatched => id -> r.matchedPositions
+    if (candidates.isEmpty) return Map.empty
+    // CoW tasks write survivors next to the table's data files; MoR
+    // needs positions only (the kill lands in the delete vector)
+    val survivorDir =
+      if (st.deleteMode == DeleteModeMor) None else Some(st.storageDir)
+    // plan construction validates filter shapes driver-side for EVERY
+    // candidate before the job starts
+    val tasks = candidates.map { b =>
+      val (matchSchema, pred, pushable) = matchPlanFor(st, b, filters)
+      DistributedDml.EvalTask(b.batchId, b.store.path, b.schema,
+        matchSchema = matchSchema, pred = pred,
+        survivorDir = survivorDir,
+        declaredSort = st.declaredSortOrder, bloomCols = st.bloomCols.toSet,
+        pushFilters = pushable)
     }
-    val schemas = candidates.iterator.map(b => b.batchId -> b.schema).toMap
-    val preRewritten = jobResults.collect {
-      case (id, r) if r.anyMatched =>
-        id -> r.survivor.map(s =>
-          (FileStore(s.path, s.count, schemas(id), s.sorted), s.stats))
-    }
-    (localDead ++ jobDead, preRewritten)
+    // dead positions ride ONE broadcast keyed by batch — never the
+    // per-task closure — as a COMPRESSED bitmap: a run-shaped
+    // million-row DV is kilobytes in the broadcast, not a 30 MB boxed
+    // Set[Int]
+    val kills = candidates.collect {
+      case b if b.dv.nonEmpty =>
+        b.batchId -> DistributedDml.KillState(PosBitmap.toBytes(b.dv.keysIterator))
+    }.toMap
+    DistributedDml.run(jobContext(st, op), tasks, kills).filter(_._2.anyMatched)
   }
 
   /** Apply computed row kills at the CURRENT (already bumped) version —
     * the mutation half shared by DELETE and filtered OVERWRITE: delete
     * vectors on merge-on-read tables (no row copied), soft-remove +
-    * survivor re-commit on copy-on-write. Caller holds the table monitor
-    * and has bumped `st.version`.
+    * re-commit of the job's executor-written survivor file on
+    * copy-on-write. Caller holds the table monitor and has bumped
+    * `st.version`.
     */
   private def applyRowKillsLocked(
-      st: State, deadByBatch: Map[Long, Array[Int]],
-      preRewritten: Map[Long, Option[(FileStore, Map[String, ColStats])]] =
-        Map.empty): Unit = {
-    if (deadByBatch.isEmpty) return
+      st: State, matched: Map[Long, DistributedDml.EvalResult]): Unit = {
+    if (matched.isEmpty) return
     if (st.deleteMode == DeleteModeMor) {
       // MERGE-ON-READ: record matched positions in the batch's delete
       // vector at this version — no row is copied (the file is shared by
@@ -3075,40 +2868,27 @@ object MemTables {
       // the change feed reports row-level deletes at this version. The
       // read path pays the overlay filter instead.
       st.batches = st.batches.map { b =>
-        deadByBatch.get(b.batchId) match {
-          case Some(dead) if b.removedAt == Long.MaxValue =>
-            b.copy(dv = b.dv ++ dead.map(_ -> st.version))
+        matched.get(b.batchId) match {
+          case Some(r) if b.removedAt == Long.MaxValue =>
+            b.copy(dv = b.dv ++ r.matchedPositions.map(_ -> st.version))
           case _ => b
         }
       }
     } else {
-      // job-evaluated batches arrive with their survivor files already
-      // executor-written (preRewritten); only the remainder — batches a
-      // sessionless caller evaluated in-process — materializes here.
-      // Survivor reads/writes parallelize (file-open fixed costs); the
-      // batch-id mint and the batches swap stay serial under the monitor
-      val rewritten: Map[Long, Option[(FileStore, Map[String, ColStats])]] =
-        preRewritten ++ parMap(st.batches.filter(b =>
-          deadByBatch.contains(b.batchId) && b.removedAt == Long.MaxValue &&
-            !preRewritten.contains(b.batchId))) { b =>
-          val deadSet = deadByBatch(b.batchId).toSet
-          val keep = b.rows.indices.filterNot(deadSet).map(b.rows).toArray
-          b.batchId -> (if (keep.isEmpty) None
-          // survivors carry EXACT stats (the rewrite materializes them
-          // anyway): a deleted row may have been the recorded extreme,
-          // and the aggregate pushdown answers MIN/MAX from these
-          else Some((storeFor(st, b.schema, keep),
-            statsOf(b.schema, keep, st.bloomCols.toSet))))
-        }.toMap
+      // COPY-ON-WRITE: the matched batch is soft-removed and its survivor
+      // file (None = every row matched) re-committed; survivors carry the
+      // task's EXACT stats — a deleted row may have been the recorded
+      // extreme, and the aggregate pushdown answers MIN/MAX from these
       st.batches = st.batches.flatMap { b =>
-        rewritten.get(b.batchId) match {
-          case Some(surv) if b.removedAt == Long.MaxValue =>
+        matched.get(b.batchId) match {
+          case Some(r) if b.removedAt == Long.MaxValue =>
             val removed = b.copy(removedAt = st.version)
-            surv match {
+            r.survivor match {
               case None => Vector(removed)
-              case Some((store, stats)) =>
+              case Some(s) =>
                 Vector(removed, TaggedBatch(b.schema, st.version, b.writeVersion,
-                  store, batchId = st.mintBatchId(), stats = stats,
+                  FileStore(s.path, s.count, b.schema, s.sorted),
+                  batchId = st.mintBatchId(), stats = s.stats,
                   part = b.part, specId = b.specId))
             }
           case _ => Vector(b)
@@ -3117,6 +2897,19 @@ object MemTables {
     }
   }
 
+  /** Row-level DELETE at one new version. Merge-on-read tables record the
+    * matches in delete vectors; copy-on-write tables take the GROUP
+    * REWRITE shape every table format without deletion vectors uses: each
+    * batch containing matches is soft-removed at the delete's version and
+    * its SURVIVORS re-committed as a new batch visible from that version
+    * (`writeVersion` preserved — the bytes' schema era doesn't change).
+    * Untouched batches are left alone, so delete cost is proportional to
+    * the batches containing matches, not the table. Time travel before the
+    * delete still sees every row; the change feed reports the rewrite as
+    * remove-batch + re-insert-survivors (the honest file-level log a
+    * group-based rewrite produces — row-level delete events would require
+    * diffing, which is the CDC consumer's fold).
+    */
   def deleteWhere(key: String, filters: Array[Filter]): Unit = {
     val st = tables.getOrElse(key,
       throw new IllegalStateException(s"mem table $key dropped mid-delete"))
@@ -3125,10 +2918,10 @@ object MemTables {
       // rows is a no-op and must not burn a version slot — a phantom
       // 'delete' ledger entry with no change-feed events would misreport
       // provenance (mirrors compact()'s no-op path)
-      val (deadByBatch, preRewritten) = matchedRowsLocked(st, filters)
-      if (deadByBatch.isEmpty) return
+      val matched = matchedRowsLocked(st, filters, "DELETE")
+      if (matched.isEmpty) return
       st.version += 1
-      applyRowKillsLocked(st, deadByBatch, preRewritten)
+      applyRowKillsLocked(st, matched)
       st.stamp("delete")
     }
   }
@@ -3148,9 +2941,9 @@ object MemTables {
       throw new IllegalStateException(s"mem table $key dropped mid-overwrite"))
     st.synchronized {
       // matching throws on unsupported shapes BEFORE any mutation
-      val (deadByBatch, preRewritten) = matchedRowsLocked(st, filters)
+      val matched = matchedRowsLocked(st, filters, "filtered overwrite")
       st.version += 1
-      applyRowKillsLocked(st, deadByBatch, preRewritten)
+      applyRowKillsLocked(st, matched)
       val fresh = batches.flatMap(rs => mkBatches(st, writeSchema, rs, st.version))
       st.batches = st.batches ++ fresh
       // survivors keep their order (DV kills / order-preserving rewrite),
@@ -3504,15 +3297,13 @@ final class MemMetaTable(key: String, kind: String) extends Table with SupportsR
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val st = state
-    val (specs, batches, eras, droppedAt, eqDeletes, times, kinds, tags, brs) =
+    val (specs, batches, times, kinds, tags, brs) =
       st.synchronized {
         (st.specHistory, st.batches.filter(_.removedAt == Long.MaxValue),
-          st.eras, st.droppedAt, st.eqDeletes, st.versionTimes, st.opKinds,
-          st.tags, st.branches)
+          st.versionTimes, st.opKinds, st.tags, st.branches)
       }
     val curSpecId = specs.size - 1
-    def kills(b: MemTables.TaggedBatch): Long =
-      MemTables.effectiveKills(b, eqDeletes, eras, droppedAt).size.toLong
+    def kills(b: MemTables.TaggedBatch): Long = b.dv.size.toLong
     // each batch renders under its OWN written spec (spec evolution)
     def renderPart(b: MemTables.TaggedBatch): String =
       specs(b.specId).zip(b.part).map {
@@ -3725,8 +3516,8 @@ final class MemScanBuilder(
     * scanning ZERO rows (complete pushdown: Spark plans no aggregate exec
     * at all). Honesty rules, enforced per aggregation:
     *
-    *  - COUNT(*) is always exact: kill maps (delete vectors + equality
-    *    deletes) are planning-time metadata, so live rows = rows − kills.
+    *  - COUNT(*) is always exact: delete vectors are planning-time
+    *    metadata, so live rows = rows − kills.
     *  - MIN/MAX/COUNT(col) push ONLY when no visible batch carries a kill
     *    at the bound snapshot — a killed row may BE the recorded extreme
     *    (bounds go stale-conservative under deletes), so the scan declines
@@ -3823,13 +3614,9 @@ object MemScanBuilder {
     val bound = asOf.getOrElse(Long.MaxValue)
 
     // the stats fold over one batch set (the whole table, or one group);
-    // returns (live row count, values) — the group path reuses the live
-    // count instead of recomputing effectiveKills (which re-probes rows,
-    // a parquet read per file-backed batch) a second time per group
+    // returns (live row count, values)
     def aggOver(batches: Vector[MemTables.TaggedBatch]): Option[(Long, Seq[Any])] = {
-      val killCounts = batches.map(b =>
-        MemTables.effectiveKills(b, meta.eqDeletes, meta.eras, meta.droppedAt)
-          .count(_._2 <= bound).toLong)
+      val killCounts = batches.map(b => b.dv.count(_._2 <= bound).toLong)
       val anyKills = killCounts.exists(_ > 0)
       val liveRows = batches.map(_.rowCount.toLong).sum - killCounts.sum
 
@@ -4130,10 +3917,10 @@ final class MemScan(
     val st = MemTables.get(key)
       .getOrElse(throw new IllegalStateException(s"mem table $key dropped"))
     val (curVersion, earliestVersion, history, droppedAtCur, erasCur, allBatches,
-        branchesNow, eqDeletesNow, specs, defaultsCur) =
+        branchesNow, specs, defaultsCur) =
       st.synchronized {
         (st.version, st.earliestVersion, st.history, st.droppedAt, st.eras,
-          st.batches, st.branches, st.eqDeletes, st.specHistory, st.columnDefaults)
+          st.batches, st.branches, st.specHistory, st.columnDefaults)
       }
     // a snapshot expired between loadTable and scan planning must fail
     // loudly, not read the partial remains of its batches — validated
@@ -4150,8 +3937,8 @@ final class MemScan(
     val meta = asOf match {
       case Some(v) =>
         val h = history.filter(_.version <= v).last
-        MemScan.BoundMeta(h.droppedAt, h.eras, eqDeletesNow, h.defaults)
-      case None => MemScan.BoundMeta(droppedAtCur, erasCur, eqDeletesNow, defaultsCur)
+        MemScan.BoundMeta(h.droppedAt, h.eras, h.defaults)
+      case None => MemScan.BoundMeta(droppedAtCur, erasCur, defaultsCur)
     }
     val droppedAt = meta.droppedAt
     // snapshot visibility: a batch exists in AS OF v iff committed at or
@@ -4544,9 +4331,7 @@ final class MemScan(
     // version) and shipped in the partition for the reader to skip
     val bound = asOf.getOrElse(Long.MaxValue)
     val withDead = visible.zip(srcMaps).map { case (b, srcNames) =>
-      val dead = MemTables.effectiveKills(b, meta.eqDeletes, meta.eras, meta.droppedAt)
-        .collect { case (p, at) if at <= bound => p }.toSet
-      (b, srcNames, dead)
+      (b, srcNames, b.deadAt(bound))
     }
     // pushed TABLESAMPLE (COMPLETE — Spark deleted the Sample operator):
     // deterministic per-row Bernoulli over hash(seed, batchId, position);
@@ -5101,7 +4886,6 @@ object MemScan {
     */
   final case class BoundMeta(
       droppedAt: Map[String, Long], eras: Map[String, Vector[(Long, String)]],
-      eqDeletes: Vector[MemTables.EqDelete] = Vector.empty,
       defaults: Map[String, (Long, Any)] = Map.empty)
 
   /** Era/tombstone-resolved source-field name of one bound column within a
@@ -5313,7 +5097,7 @@ final class MemDeltaBatchWrite(
     // against the recovered state — a disjoint foreign commit lands both
     // writers, an overlapping one still fails loudly from the validation
     MemTables.withCommitRetry(key)(MemTables.applyDelta(
-      key, state.scannedVersion, writeSchema,
+      key, writeSchema,
       msgs.flatMap(_.deletes).toSeq,
       msgs.map(_.inserts).toSeq,
       msgs.flatMap(_.updates).toSeq))
@@ -5506,8 +5290,8 @@ final class MemStreamingWrite(
     key: String, queryId: String, truncate: Boolean, writeSchema: StructType)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   // tables created with graft.upsert-keys take the UPSERT ingest path:
-  // each Append-mode epoch publishes equality-delete(epoch keys) + inserts
-  // atomically ([[MemTables.commitEpochUpsert]]); Complete-mode (truncate)
+  // each Append-mode epoch kills older rows by key (converted to DV
+  // entries) and publishes its inserts atomically ([[MemTables.commitEpochUpsert]]); Complete-mode (truncate)
   // epochs already replace the table, so they stay plain overwrites
   private val upsertKeys: Option[Seq[String]] =
     MemTables.get(key).flatMap(_.createProps.get(MemTables.UpsertKeysProp))
@@ -5752,10 +5536,10 @@ object MemChangesSource {
     // each micro-batch window long after bind, and an expire_snapshots
     // interleaved since then must fail the read loudly, never let it
     // silently emit the surviving fraction of the window's events
-    val (batches, hist, compactions, earliest, eqDeletes, updatedAt, postBatches) =
+    val (batches, hist, compactions, earliest, updatedAt, postBatches) =
       st.synchronized {
         (st.batches, st.history, st.compactionVersions, st.earliestVersion,
-          st.eqDeletes, st.updatedAt, st.updatePostBatches)
+          st.updatedAt, st.updatePostBatches)
       }
     if (from < earliest)
       throw new IllegalStateException(
@@ -5768,10 +5552,6 @@ object MemChangesSource {
     val dataSchema = metaAt.schema
     def srcMap(b: MemTables.TaggedBatch): Map[String, String] =
       MemScan.srcMapOf(dataSchema, b, meta)
-    // positional DV entries merged with equality-delete matches — one
-    // uniform row-level kill map per batch (position -> death version)
-    def killsOf(b: MemTables.TaggedBatch): Map[Int, Long] =
-      MemTables.effectiveKills(b, eqDeletes, metaAt.eras, metaAt.droppedAt)
     // ONE event partition: the batch's PATH plus the event's position
     // selection (executors stream the parquet — neither the CDC read nor
     // the MV refresh window it feeds ever pulls rows through the driver
@@ -5804,8 +5584,7 @@ object MemChangesSource {
       .filter(b => b.removedAt > from && b.removedAt <= to &&
         !compactions.contains(b.removedAt))
       .map { b =>
-        val kills = killsOf(b)
-        eventOf(b, "delete", b.removedAt, kills.keys.toArray.sorted, null)
+        eventOf(b, "delete", b.removedAt, b.dv.keys.toArray.sorted, null)
       }
     // merge-on-read deletes are ROW-level events at the version their DV
     // entry was recorded — the change feed a DV table produces is finer
@@ -5813,7 +5592,7 @@ object MemChangesSource {
     // pre/post-image mode the positions a delta UPDATE killed surface as
     // update_preimage, split from the same version's plain deletes
     val dvDeletes = batches.flatMap { b =>
-      killsOf(b).toSeq
+      b.dv.toSeq
         .filter { case (_, at) => at > from && at <= to }
         .groupBy(_._2).toSeq.flatMap { case (at, entries) =>
           val (pre, plain) =
@@ -6091,7 +5870,7 @@ object MemTableMicroBatchStream {
   /** Partitions of one streamed window.
     *
     *  - `from == −1`: the INITIAL SNAPSHOT at `to` — live batches with
-    *    their DV/equality kills at that version, read exactly like a
+    *    their DV kills at that version, read exactly like a
     *    `VERSION AS OF to` scan.
     *  - otherwise: the batches appended by append-kind versions in
     *    `(from, to]`, as-appended (no kill overlay: later deletes are
@@ -6110,8 +5889,8 @@ object MemTableMicroBatchStream {
       skipChangeCommits: Boolean): Array[InputPartition] = {
     val st = MemTables.get(key).getOrElse(
       throw new IllegalStateException(s"mem table $key dropped"))
-    val (batches, hist, earliest, eqDeletes, opKinds) = st.synchronized {
-      (st.batches, st.history, st.earliestVersion, st.eqDeletes, st.opKinds)
+    val (batches, hist, earliest, opKinds) = st.synchronized {
+      (st.batches, st.history, st.earliestVersion, st.opKinds)
     }
     if ((if (from < 0) to else from) < earliest)
       throw new IllegalStateException(
@@ -6144,11 +5923,8 @@ object MemTableMicroBatchStream {
         b.batchId, None, defaults = defaults)
     }
     if (from < 0)
-      batches.filter(b => b.version <= to && b.removedAt > to).map { b =>
-        val dead = MemTables.effectiveKills(b, eqDeletes, metaAt.eras, metaAt.droppedAt)
-          .collect { case (p, at) if at <= to => p }.toSet
-        toPartition(b, dead)
-      }.toArray
+      batches.filter(b => b.version <= to && b.removedAt > to)
+        .map(b => toPartition(b, b.deadAt(to))).toArray
     else {
       def kindOf(v: Long): String = opKinds.getOrElse(v, "unknown")
       val offending = ((from + 1) to to).filter(v =>

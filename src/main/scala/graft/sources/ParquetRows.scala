@@ -257,9 +257,9 @@ object ParquetRows {
     */
   val readCalls = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Materialize a whole file (driver-side content paths: equality-delete
-    * probes, sessionless DELETE row evaluation — gate-scale by contract,
-    * documented at each call site).
+  /** Materialize a whole file (the one driver-side content path:
+    * rollback's delete-vector subset copy — gate-scale by contract,
+    * documented at its call site).
     */
   def read(path: String, schema: StructType): Array[InternalRow] = {
     readCalls.incrementAndGet()

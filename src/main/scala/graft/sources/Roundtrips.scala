@@ -1216,9 +1216,9 @@ object Roundtrips {
     * DML variant (Iceberg equality-delete files, the Flink upsert shape):
     * a table created with `graft.upsert-keys` turns each streaming epoch
     * into one atomic version carrying delete-by-key over the epoch's keys
-    * plus the inserts ([[MemTables.commitEpochUpsert]]); the delete
-    * applies at read to strictly-older batches only, so an epoch never
-    * deletes its own rows and write cost is O(epoch). Epoch 1 ingests the
+    * plus the inserts ([[MemTables.commitEpochUpsert]]); the commit
+    * converts the delete into delete-vector entries on strictly-older
+    * batches only, so an epoch never deletes its own rows. Epoch 1 ingests the
     * base corpus; epoch 2 re-ingests every `k % 3 = 0` key with a bumped
     * value. The query unions the pinned first snapshot, the current
     * (last-write-per-key) read, and the change feed — whose v2 events

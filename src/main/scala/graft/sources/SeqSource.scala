@@ -1894,8 +1894,8 @@ object ExpireOlderThanProcedure
 /** `CALL graft.rewrite_data_files('<table>', '<sort_by>')` — DISTRIBUTED
   * (and optionally SORTED/CLUSTERED) compaction, the scale form of
   * `compact_table`: the current snapshot is read through the ordinary V2
-  * scan AS A SPARK JOB (delete vectors, equality deletes, renames and
-  * widenings all applied by the read path itself), range-partitioned on
+  * scan AS A SPARK JOB (delete vectors, renames and widenings all
+  * applied by the read path itself), range-partitioned on
   * `sort_by` (comma-separated; '' = keep the scan partitioning) and sorted
   * within partitions, task-buffered, and published atomically at one
   * CDC-invisible version ([[MemTables.publishCompaction]]) with fresh
@@ -1941,8 +1941,8 @@ object RewriteDataFilesProcedure
 
 /** The DISTRIBUTED REWRITE JOB shared by `rewrite_data_files` and
   * `compact_table`-on-file-backed-tables: scan the current snapshot
-  * through the ordinary read path (delete vectors, equality deletes, and
-  * era projection all apply — the output IS the logical table), optionally
+  * through the ordinary read path (delete vectors and era projection
+  * all apply — the output IS the logical table), optionally
   * re-cluster, write per task (STREAMING into parquet files on the
   * file-backed plane), and publish atomically at one CDC-invisible
   * version with optimistic concurrency.

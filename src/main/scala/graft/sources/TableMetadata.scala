@@ -12,8 +12,8 @@ import graft.sources.MemTables._
   * serializes the table's COMPLETE
   * metadata plane — version ledger, schema-era history, refs
   * (tags/branches), partition-spec timeline, per-batch manifests (path,
-  * count, partition tuple, column bounds, delete vector), equality
-  * deletes, and the change-feed provenance maps — as one JSON document
+  * count, partition tuple, column bounds, delete vector), and the
+  * change-feed provenance maps — as one JSON document
   * beside the data files, atomically (tmp + rename). The parquet files +
   * `metadata.json` then ARE the table: a process restart (or a
   * `CALL graft.unload_table`) loses nothing, because
@@ -26,12 +26,15 @@ import graft.sources.MemTables._
   * `metadata.json` holds only the mutable plane (ledger, refs, DVs,
   * manifest pointers), so per-commit metadata cost tracks the mutation,
   * not the table size. Expired batches' manifests become unreferenced
-  * files that `remove_orphan_files` sweeps. Driver-resident tables (no
-  * storage dir) have no durable plane by that mode's own contract and
-  * skip persistence.
+  * files that `remove_orphan_files` sweeps.
+  *
+  * Every row kill is a delete-vector entry. Documents from earlier
+  * versions of this format could carry an `eq-deletes` array (read-time
+  * key-based kills); [[load]] refuses one that is non-empty rather than
+  * bring its killed rows back.
   *
   * Values inside metadata (column bounds, partition tuples, EXISTS
-  * defaults, equality-delete keys) are INTERNAL Spark values; they travel
+  * defaults) are INTERNAL Spark values; they travel
   * as self-describing `{"t": tag, "v": value}` nodes so decode needs no
   * schema context and numeric types survive exactly (longs as JSON
   * numbers, floats via their IEEE bit patterns when non-finite).
@@ -58,6 +61,13 @@ object TableMetadata {
 
   private val mapper = new ObjectMapper()
 
+  /** A document with a non-empty legacy `eq-deletes` array ([[load]]).
+    * Disk recovery rethrows it instead of skipping the directory, so a
+    * read fails loudly rather than report the table missing or fall back
+    * to an older directory of the same key.
+    */
+  final class LegacyMetadataException(msg: String) extends IllegalStateException(msg)
+
   /** Memoized schema-JSON parse: batches overwhelmingly share their schema
     * string (one per era), but each manifest carries its own copy — a
     * 10k-batch recovery would otherwise pay 10k `DataType.fromJson`
@@ -73,7 +83,7 @@ object TableMetadata {
   // ---------------------------------------------------------------- values
 
   /** Encode one internal metadata value (stats bound / partition tuple
-    * element / default / eq-delete key) self-describingly.
+    * element / default) self-describingly.
     */
   private def valOut(v: Any): JsonNode = v match {
     case null => mapper.nullNode()
@@ -397,20 +407,6 @@ object TableMetadata {
     val tags = mapper.createObjectNode()
     st.tags.foreach { case (t, v) => tags.put(t, v) }
     root.set[JsonNode]("tags", tags)
-    val eqs = mapper.createArrayNode()
-    st.eqDeletes.foreach { e =>
-      val o = mapper.createObjectNode()
-      o.put("version", e.version)
-      val cols = mapper.createArrayNode(); e.keyCols.foreach(cols.add)
-      o.set[JsonNode]("key-cols", cols)
-      val keys = mapper.createArrayNode()
-      e.keys.foreach { k =>
-        val a = mapper.createArrayNode(); k.foreach(v => a.add(valOut(v))); keys.add(a)
-      }
-      o.set[JsonNode]("keys", keys)
-      eqs.add(o)
-    }
-    root.set[JsonNode]("eq-deletes", eqs)
     val sortedBy = mapper.createArrayNode()
     st.sortedBy.foreach(sortedBy.add)
     root.set[JsonNode]("sorted-by", sortedBy)
@@ -546,6 +542,13 @@ object TableMetadata {
       throw new IllegalStateException(
         s"table metadata at $dir has format-version $fv; this engine reads $FormatVersion")
     val key = root.get("key").asText
+    // a legacy read-time equality-delete record has no reader any more:
+    // loading it would silently bring the rows it killed back
+    if (iter(root.get("eq-deletes")).nonEmpty)
+      throw new LegacyMetadataException(
+        s"table $key (metadata at $dir) carries equality deletes, which this " +
+          "engine no longer applies; it cannot be loaded without resurrecting " +
+          "the rows they killed")
     val schema = schemaOf(root.get("schema").asText)
     val createProps = fields(root.get("create-props"))
       .map { case (k, v) => k -> v.asText }.toMap
@@ -584,11 +587,6 @@ object TableMetadata {
     st.compactionVersions = iter(root.get("compaction-versions")).map(_.asLong).toSet
     st.opKinds = fields(root.get("op-kinds")).map { case (v, k) => v.toLong -> k.asText }.toMap
     st.tags = fields(root.get("tags")).map { case (t, v) => t -> v.asLong }.toMap
-    st.eqDeletes = iter(root.get("eq-deletes")).map { e =>
-      EqDelete(e.get("version").asLong,
-        iter(e.get("key-cols")).map(_.asText).toSeq,
-        iter(e.get("keys")).map(k => iter(k).map(valIn).toSeq: Seq[Any]).toSet)
-    }.toVector
     st.sortedBy = iter(root.get("sorted-by")).map(_.asText).toSeq
     st.sortedSince = root.get("sorted-since").asLong
     st.updatedAt = fields(root.get("updated-at")).map { case (v, a) =>

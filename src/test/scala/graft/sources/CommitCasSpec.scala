@@ -20,6 +20,26 @@ class CommitCasSpec extends SparkSpec {
   private def causeChain(t: Throwable): Seq[Throwable] =
     Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(12).toSeq
 
+  /** The `(_batch_id, _batch_pos)` row id of the row with key `k`. */
+  private def rowIdOf(tbl: String, k: Long): (Long, Int) = {
+    val r = spark.sql(s"SELECT _batch_id, _batch_pos FROM graft.$tbl WHERE k = $k").head()
+    (r.getLong(0), r.getInt(1))
+  }
+
+  /** DRIVER B's row kill, committed through an INDEPENDENT state over the
+    * same warehouse: one positional DV entry at a new version.
+    */
+  private def foreignKill(dir: String, rowId: (Long, Int)): Unit = {
+    val (_, foreign) = TableMetadata.load(dir).get
+    foreign.synchronized {
+      foreign.version += 1
+      foreign.batches = foreign.batches.map(b =>
+        if (b.batchId == rowId._1) b.copy(dv = b.dv + (rowId._2 -> foreign.version))
+        else b)
+      foreign.stamp("delete")
+    }
+  }
+
   private def isConflict(t: Throwable): Boolean =
     causeChain(t).exists {
       case _: java.util.ConcurrentModificationException => true
@@ -58,31 +78,29 @@ class CommitCasSpec extends SparkSpec {
       "'graft.delete-mode'='merge-on-read')")
     spark.sql("INSERT INTO graft.cas_mor VALUES (1, 10), (2, 20)")
     val dir = MemTables.get("cas_mor").get.storageDir
-    // DRIVER B publishes an EQUALITY DELETE through an independent state:
-    // the interleaved kill could overlap rows driver A's UPDATE re-inserts
-    // as post-images, so the replayed delta must REJECT (applyDelta's own
-    // snapshot-isolation validation), not silently publish — the
-    // auto-retry must never launder a GENUINE conflict into a lost update
-    val (_, foreign) = TableMetadata.load(dir).get
-    foreign.synchronized {
-      foreign.version += 1
-      foreign.eqDeletes = foreign.eqDeletes :+
-        MemTables.EqDelete(foreign.version, Seq("k"), Set(Seq(2L)))
-      foreign.stamp("delete")
-    }
-    val e = intercept[Exception] {
+    // DRIVER B kills row k = 1 — the very row driver A's UPDATE rewrites —
+    // as a DV entry through an independent state. A's replayed delta
+    // must REJECT (applyDelta's already-deleted validation), not silently
+    // publish: the auto-retry must never launder a GENUINE conflict into
+    // a lost update
+    foreignKill(dir, rowIdOf("cas_mor", 1L))
+    // no freshness probe: A's UPDATE scans its pre-kill state, so the
+    // conflict surfaces at the commit's CAS and replay
+    spark.conf.set("spark.graft.catalog.refresh-interval-ms", "-1")
+    val e = try intercept[Exception] {
       spark.sql("UPDATE graft.cas_mor SET v = v + 1 WHERE k = 1")
-    }
+    } finally spark.conf.unset("spark.graft.catalog.refresh-interval-ms")
     assert(causeChain(e).exists(c => c.getMessage != null &&
-      c.getMessage.contains("equality deletes")),
-      s"expected the equality-delete conflict validation, got: $e")
-    // the loud failure evicted nothing durable: a fresh statement sees
-    // the winner's delete and completes
+      c.getMessage.contains("already-deleted")),
+      s"expected the delta's already-deleted validation, got: $e")
+    // the loud failure evicted nothing durable: fresh statements see the
+    // winner's kill, and an update of the surviving row lands once
     spark.sql("UPDATE graft.cas_mor SET v = v + 1 WHERE k = 1")
+    spark.sql("UPDATE graft.cas_mor SET v = v + 1 WHERE k = 2")
     val rows = spark.sql("SELECT k, v FROM graft.cas_mor ORDER BY k")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(rows === Seq((1L, 11L)),
-      s"row 2 must be dead and row 1 updated EXACTLY ONCE, got $rows")
+    assert(rows === Seq((2L, 21L)),
+      s"row 1 must be dead and row 2 updated EXACTLY ONCE, got $rows")
     drop("cas_mor")
   }
 
@@ -131,13 +149,7 @@ class CommitCasSpec extends SparkSpec {
     // DRIVER B kills k=2 through an INDEPENDENT state over the same
     // warehouse — driver A performs NO local write afterward
     val dir = MemTables.get("fresh_t").get.storageDir
-    val (_, foreign) = TableMetadata.load(dir).get
-    foreign.synchronized {
-      foreign.version += 1
-      foreign.eqDeletes = foreign.eqDeletes :+
-        MemTables.EqDelete(foreign.version, Seq("k"), Set(Seq(2L)))
-      foreign.stamp("delete")
-    }
+    foreignKill(dir, rowIdOf("fresh_t", 2L))
     // probe every access: the cached reader must evict-and-recover the
     // winner's plane on its next read — read-your-committed-writes
     // across processes, no local commit needed to notice

@@ -175,11 +175,9 @@ class MetadataPersistSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq === want)
     val st = MemTables.get("mp_ts").get
     assert(st.versionTimes === times, "TIMESTAMP AS OF stamps must survive")
-    // file-backed upsert epochs CONVERT their equality delete to
-    // positional DVs at commit ([[MemTables.commitEpochUpsert]]) — the
-    // durable plane carries the DV, never a probe record
-    assert(st.eqDeletes.isEmpty,
-      "converted upserts must persist no equality-delete record")
+    // upsert epochs CONVERT their key-based delete to positional DVs at
+    // commit ([[MemTables.commitEpochUpsert]]) — the durable plane
+    // carries the DV
     assert(st.batches.exists(b => b.version == 1L && b.dv.values.toSet == Set(2L)),
       "the converted positional kill must survive recovery")
     assert(st.committedEpochs.get("q-meta").exists(_.contains(0L)),
@@ -266,42 +264,88 @@ class MetadataPersistSpec extends SparkSpec {
     drop("mp_valid")
   }
 
-  test("expiry prunes equality deletes that no retained batch can feel") {
-    catalogOn(); drop("mp_eqprune")
-    spark.sql("CREATE TABLE graft.mp_eqprune (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('graft.upsert-keys'='k', " +
-      "'graft.delete-mode'='merge-on-read')")
-    val st0 = MemTables.get("mp_eqprune").get
+  test("a DELETE or upsert epoch with no session fails before anything is recorded") {
+    catalogOn(); drop("mp_nosess")
+    spark.sql("CREATE TABLE graft.mp_nosess (k BIGINT, v BIGINT) TBLPROPERTIES " +
+      "('graft.storage'='parquet', 'graft.delete-mode'='merge-on-read', " +
+      "'graft.upsert-keys'='k')")
+    spark.sql("INSERT INTO graft.mp_nosess VALUES (1, 10), (2, 20)") // v1
+    val st = MemTables.get("mp_nosess").get
     import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.catalyst.InternalRow
-    def epoch(id: Long, rows: (Long, Long)*): Unit =
-      MemTables.commitEpochUpsert("mp_eqprune", "q-prune", id, st0.schema,
-        Seq("k"), Seq(files("mp_eqprune", st0.schema,
-          rows.map(r => InternalRow(r._1, r._2)): _*)))
-    // with a session, each epoch's equality delete converts to positional
-    // DVs at commit and leaves no record to prune; a caller with no
-    // active or default session keeps the read-time record
+    import org.apache.spark.sql.sources.EqualTo
+    val epoch = files("mp_nosess", st.schema, InternalRow(2L, 21L))
+    def recorded() = (st.version, st.batches, st.committedEpochs)
+    val before = recorded()
+    // both kills are Spark jobs (the match pass, the key conversion):
+    // with no active and no default session there is nowhere to run
+    // them, and each call must throw before it bumps the version,
+    // touches a batch or remembers the epoch
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      epoch(0L, 1L -> 10L, 2L -> 20L) // v1
-      epoch(1L, 2L -> 21L, 3L -> 30L) // v2: eq-delete on {2}
-      epoch(2L, 3L -> 31L) // v3: eq-delete on {3}
+      val del = intercept[IllegalStateException](
+        MemTables.deleteWhere("mp_nosess", Array(EqualTo("k", 1L))))
+      assert(del.getMessage.contains("mp_nosess") && del.getMessage.contains("DELETE"),
+        del.getMessage)
+      assert(recorded() === before, "a failed DELETE must record nothing")
+      val up = intercept[IllegalStateException](
+        MemTables.commitEpochUpsert("mp_nosess", "q-nosess", 0L, st.schema,
+          Seq("k"), Seq(epoch)))
+      assert(up.getMessage.contains("mp_nosess"), up.getMessage)
+      assert(recorded() === before, "a failed epoch must record nothing")
     } finally {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
     }
-    val st = MemTables.get("mp_eqprune").get
-    assert(st.eqDeletes.size === 3, st.eqDeletes.toString)
-    // compaction folds everything into one post-delete batch (version 4);
-    // expiring history below it leaves NO batch any eq-delete can touch
-    spark.sql("CALL graft.compact_table('mp_eqprune')")
-    spark.sql(s"CALL graft.expire_snapshots('mp_eqprune', ${st.version})")
-    assert(st.eqDeletes.isEmpty,
-      "unreachable equality deletes must be pruned at expiry: " + st.eqDeletes)
-    assert(spark.sql("SELECT k, v FROM graft.mp_eqprune ORDER BY k").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
-      Seq(1L -> 10L, 2L -> 21L, 3L -> 31L))
-    drop("mp_eqprune")
+    // with the session back, the same DELETE and the SAME epoch commit
+    MemTables.deleteWhere("mp_nosess", Array(EqualTo("k", 1L))) // v2
+    MemTables.commitEpochUpsert("mp_nosess", "q-nosess", 0L, st.schema,
+      Seq("k"), Seq(epoch)) // v3
+    assert(st.version === before._1 + 2)
+    assert(st.committedEpochs.get("q-nosess").exists(_.contains(0L)))
+    assert(spark.sql("SELECT k, v FROM graft.mp_nosess ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq(2L -> 21L))
+    drop("mp_nosess")
+  }
+
+  test("a metadata document with legacy equality deletes is refused; an empty array loads") {
+    catalogOn(); drop("mp_legacy")
+    spark.sql("CREATE TABLE graft.mp_legacy (k BIGINT, v BIGINT) TBLPROPERTIES " +
+      "('graft.storage'='parquet', 'graft.delete-mode'='merge-on-read', " +
+      "'graft.upsert-keys'='k')")
+    spark.sql("INSERT INTO graft.mp_legacy VALUES (1, 10), (2, 20)") // v1
+    val dir = MemTables.get("mp_legacy").get.storageDir
+    spark.sql("CALL graft.unload_table('mp_legacy')")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // commit the table's current document again with `eq-deletes` set,
+    // as an earlier engine wrote a read-time key kill: {k = 2} dead at v1
+    def commitWith(eqDeletes: String): Unit = {
+      val root = mapper.readTree(MetaIO.readCurrent(dir, TableMetadata.FileName).get)
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      val gen = root.get("commit-gen").asLong
+      root.put("commit-gen", gen + 1)
+      root.set[com.fasterxml.jackson.databind.JsonNode]("eq-deletes",
+        mapper.readTree(eqDeletes))
+      MetaIO.commitCas(dir, TableMetadata.FileName, mapper.writeValueAsBytes(root), gen)
+    }
+    commitWith("""[{"version":1,"key-cols":["k"],"keys":[[{"t":"i64","v":2}]]}]""")
+    val direct = intercept[IllegalStateException](TableMetadata.load(dir))
+    assert(direct.getMessage.contains("mp_legacy") &&
+      direct.getMessage.contains("equality deletes"), direct.getMessage)
+    // a read fails loudly too: recovery neither skips the directory (the
+    // table would look missing) nor loads it without the kill (k = 2
+    // would come back)
+    val read = intercept[Exception](
+      spark.sql("SELECT k, v FROM graft.mp_legacy").collect())
+    assert(Iterator.iterate[Throwable](read)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.getMessage != null && c.getMessage.contains("mp_legacy") &&
+        c.getMessage.contains("equality deletes")), read.toString)
+    assert(!MemTables.isLoaded("mp_legacy"))
+    commitWith("[]")
+    assert(TableMetadata.load(dir).map(_._1) === Some("mp_legacy"))
+    assert(spark.sql("SELECT k, v FROM graft.mp_legacy ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq(1L -> 10L, 2L -> 20L))
+    drop("mp_legacy")
   }
 }

@@ -108,11 +108,15 @@ class RestCatalogSpec extends SparkSpec {
       spark.sql("INSERT INTO graft.rest_fresh VALUES (1, 10), (2, 20)")
       assert(spark.table("graft.rest_fresh").count() === 2L) // cache it
       val dir = MemTables.get("rest_fresh").get.storageDir
+      // DRIVER B kills k = 2 as a DV entry through an independent state
+      val r = spark.sql("SELECT _batch_id, _batch_pos FROM graft.rest_fresh WHERE k = 2")
+        .head()
+      val (id, pos) = (r.getLong(0), r.getInt(1))
       val (_, foreign) = TableMetadata.load(dir).get
       foreign.synchronized {
         foreign.version += 1
-        foreign.eqDeletes = foreign.eqDeletes :+
-          MemTables.EqDelete(foreign.version, Seq("k"), Set(Seq(2L)))
+        foreign.batches = foreign.batches.map(b =>
+          if (b.batchId == id) b.copy(dv = b.dv + (pos -> foreign.version)) else b)
         foreign.stamp("delete")
       }
       // the freshness probe's gen read rides the service too: the cached

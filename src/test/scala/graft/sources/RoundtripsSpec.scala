@@ -917,14 +917,14 @@ class RoundtripsSpec extends SparkSpec {
     // not a blind version compare
     val vIns = st.version
     graft.sources.MemTables.applyDelta(
-      "mem_delta_spec", Some(1L), st.schema, Seq.empty,
+      "mem_delta_spec", st.schema, Seq.empty,
       Seq(Array(org.apache.spark.sql.catalyst.InternalRow(9L, 90L))))
     assert(st.version === vIns + 1)
     val killedBatch = st.batches.filter(b =>
       b.removedAt == Long.MaxValue && b.dv.nonEmpty).head
     val err = intercept[IllegalStateException] {
       graft.sources.MemTables.applyDelta(
-        "mem_delta_spec", Some(1L), st.schema,
+        "mem_delta_spec", st.schema,
         Seq((killedBatch.batchId, killedBatch.dv.keys.head)), Seq.empty)
     }
     assert(err.getMessage.contains("already-deleted"))
@@ -934,7 +934,7 @@ class RoundtripsSpec extends SparkSpec {
     val vPre = st.version
     intercept[IllegalStateException] {
       graft.sources.MemTables.applyDelta(
-        "mem_delta_spec", None, st.schema, Seq((9999L, 0)), Seq.empty)
+        "mem_delta_spec", st.schema, Seq((9999L, 0)), Seq.empty)
     }
     assert(st.version === vPre)
     assert(st.versionTimes.last._1 === vPre)
@@ -943,7 +943,7 @@ class RoundtripsSpec extends SparkSpec {
     val liveId = st.batches.filter(_.removedAt == Long.MaxValue).head.batchId
     val dup = intercept[IllegalStateException] {
       graft.sources.MemTables.applyDelta(
-        "mem_delta_spec", None, st.schema,
+        "mem_delta_spec", st.schema,
         Seq((liveId, 0), (liveId, 0)), Seq.empty)
     }
     assert(dup.getMessage.contains("twice"))
